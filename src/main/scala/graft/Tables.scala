@@ -1,6 +1,11 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.Memo
 
 /** Typed loaders for the fixture tables (see /root/repo/FIXTURES.md).
   *
@@ -9,10 +14,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * which is what lets identical code run from the 6k-row sf0.001 fixture to
   * a 100 TB lake — task parallelism follows input splits
   * (`spark.sql.files.maxPartitionBytes`), not anything hard-coded here.
+  *
+  * Schema cache: a bare `spark.read.parquet` infers the schema with a
+  * Spark job (a footer read, ~100 ms at fixture scale) every time it is
+  * called, and most queries are nothing but scans. So [[read]] infers
+  * each path's `StructType` once, with Spark's own inference, and every
+  * later read declares it (`spark.read.schema(cached)`), which builds
+  * the DataFrame with zero jobs. The cache key has three parts:
+  *  - the path;
+  *  - its content stamp ([[Memo.pathStamp]]: every file's name, length
+  *    and mtime), so a table rewritten in the same JVM (GenSf1, spec
+  *    temp dirs, a sink rewritten in place) is inferred again;
+  *  - the session's values of every conf that changes what inference
+  *    returns (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+  *    `spark.sql.caseSensitive`) — [[events]] sets
+  *    `spark.sql.legacy.parquet.nanosAsLong`, which decides the `ts`
+  *    type.
+  * A declared schema is safe at the 100 TB design point: the cached
+  * schema IS the inferred one (all columns, nullable, partition columns
+  * last, exactly as a bare read gives them — TablesSchemaSpec pins
+  * this), and the cost of inference becomes one footer read per table
+  * per stamp instead of one per query. The stamp walks the local file
+  * system, where the fixtures live, listing the same files the scan's
+  * own file index lists.
   */
 object Tables {
+  private val schemas = TrieMap.empty[(String, String, String), StructType]
+
+  private def readConfs(s: SparkSession): String =
+    s.conf.getAll.iterator.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+      k.startsWith("spark.sql.legacy.parquet.") ||
+      k == "spark.sql.caseSensitive"
+    }.toSeq.sorted.mkString(",")
+
+  /** The schema a bare `spark.read.parquet(path)` infers, cached as
+    * described above. */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    schemas.getOrElseUpdate((path, Memo.pathStamp(path), readConfs(spark)),
+      spark.read.parquet(path).schema)
+
+  /** `spark.read.parquet(path)` without the per-call inference job. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -43,8 +90,12 @@ object Tables {
     */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 >= target) df else df.repartition(target)
+    if (scanWidth(df) * 2 >= target) df else df.repartition(target)
   }
+
+  /** The planned scan's split count (see [[fanOut]]: resolved at
+    * planning time, no job). */
+  def scanWidth(df: DataFrame): Int = df.rdd.getNumPartitions
 
   /** `events.parquet` — the fixture's timestamp physical type has varied
     * across driver generations: INT64 TIMESTAMP(NANOS) (which Spark 4

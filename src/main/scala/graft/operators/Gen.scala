@@ -55,11 +55,14 @@ private[operators] object Gen {
     * there) can still be freed the moment its loop ends instead of
     * lingering until GC + ContextCleaner run, which in a single
     * 331-query bench JVM can be queries later. No-op on frames whose
-    * plan holds no LogicalRDD leaf. */
+    * plan holds no LogicalRDD leaf, and on frames of a stopped
+    * SparkContext: its blocks died with it, and unpersisting through
+    * its torn-down block manager throws. */
   def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    if (!df.sparkSession.sparkContext.isStopped)
+      df.queryExecution.analyzed.foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
 }

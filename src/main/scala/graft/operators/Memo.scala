@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staleness (the r14 advice on `corpusN`): entries are keyed by a
   * CONTENT STAMP of the fixture files backing the build — every file's
   * (name, length, mtime) under `dir/table.parquet` — plus the session's
-  * identity, so a fixture regenerated in-JVM (GenSf1 writes sf1 then
+  * unique id, so a fixture regenerated in-JVM (GenSf1 writes sf1 then
   * chains to sf10) or a fresh SparkSession (a stopped session's cached
   * blocks are gone) rebuilds instead of serving a stale or poisoned
   * frame. A superseded entry's checkpoint blocks are released via
@@ -36,22 +36,25 @@ private[graft] object Memo {
       held: Seq[DataFrame])
   private val entries = TrieMap.empty[String, Entry]
 
-  /** Content stamp of `dir/<table>.parquet` for each table: every
-    * regular file's (name, length, lastModified), recursively for
-    * directory-layout parquet. Cheap (pure metadata) relative to the
-    * builds memoized behind it. */
-  private[graft] def tableStamp(dir: String, tables: Seq[String]): String = {
+  /** Content stamp of `dir/<table>.parquet` for each table (see
+    * [[pathStamp]]), prefixed with the table name. */
+  private[graft] def tableStamp(dir: String, tables: Seq[String]): String =
+    tables.map(t => t + pathStamp(s"$dir/$t.parquet")).mkString(";")
+
+  /** Content stamp of one parquet path: every regular file's (name,
+    * length, lastModified), recursively for directory-layout parquet
+    * and partitioned sinks. Cheap (pure metadata) relative to the work
+    * keyed behind it. */
+  private[graft] def pathStamp(path: String): String = {
     def walk(f: File): Seq[File] = {
       val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
       if (f.isDirectory) kids.sortBy(_.getName).flatMap(walk) else Seq(f)
     }
-    tables.map { t =>
-      val root = new File(s"$dir/$t.parquet")
-      if (!root.exists()) s"$t:absent"
-      else walk(root)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-        .mkString(s"$t[", ",", "]")
-    }.mkString(";")
+    val root = new File(path)
+    if (!root.exists()) ":absent"
+    else walk(root)
+      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+      .mkString("[", ",", "]")
   }
 
   /** Return the memoized value for (key, dir), building it if absent or
@@ -64,8 +67,7 @@ private[graft] object Memo {
       tables: Seq[String])(build: => (T, Seq[DataFrame])): T =
     synchronized {
       val k = s"$key@$dir"
-      val stamp =
-        s"${System.identityHashCode(s)}|${tableStamp(dir, tables)}"
+      val stamp = s"${sessionId(s)}|${tableStamp(dir, tables)}"
       entries.get(k) match {
         case Some(e) if e.stamp == stamp => e.value.asInstanceOf[T]
         case prior =>
@@ -75,6 +77,15 @@ private[graft] object Memo {
           v
       }
     }
+
+  /** A session's unique id, numbered on first sight (called under the
+    * Memo lock). `System.identityHashCode` is not one: a stopped
+    * session's hash can be handed to its successor. Weak keys: a
+    * dropped session's number is never reused, only forgotten. */
+  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]()
+  private var sessionsSeen = 0L
+  private def sessionId(s: SparkSession): String =
+    sessionIds.computeIfAbsent(s, _ => { sessionsSeen += 1; s"s$sessionsSeen" })
 
   /** Release a frame produced by `Dataset.localCheckpoint` — the
     * queries-package door to [[Gen.releaseLocalCheckpoint]] for builds

@@ -495,7 +495,7 @@ object Events extends Q.Module {
         else graft.streaming.EventStream.runToMemory(sessions.toDF(), table,
           org.apache.spark.sql.streaming.OutputMode.Append)
       }
-      (if (big) s.read.parquet(path) else s.table(table))
+      (if (big) Tables.read(s, path) else s.table(table))
         .select(col("user_id"),
           col("start").cast("timestamp_ntz").as("sess_start"),
           col("end").cast("timestamp_ntz").as("sess_end"),
@@ -3516,7 +3516,7 @@ object Events extends Q.Module {
         else graft.streaming.EventStream.runToMemory(joined, table,
           org.apache.spark.sql.streaming.OutputMode.Append)
       }
-      (if (big) s.read.parquet(path) else s.table(table))
+      (if (big) Tables.read(s, path) else s.table(table))
         .select(col("user_id"),
           col("etime").cast("timestamp_ntz").as("etime"),
           col("event_type"), col("value"),

@@ -42,7 +42,7 @@ object Scale extends Q.Module {
           .withColumn("yr", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("yr").parquet(path)
       }
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("yr") === 1997) // PartitionFilters: directory-level prune
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))

@@ -790,7 +790,7 @@ object Sources extends Q.Module {
             concat(lit("BF-"), col("o_orderpriority")))
           .write.mode("overwrite").partitionBy("ym").parquet(path)
       }
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("ym") >= 199504 && col("ym") <= 199508)
         .groupBy(col("ym"))
         .agg(count(lit(1)).as("n"),

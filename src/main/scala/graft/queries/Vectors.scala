@@ -540,10 +540,12 @@ object Vectors extends Q.Module {
       // showed q129's hot stage is the interpreted HOF quant itself
       // (norm2 fold + transform per row — 0.5 s single-task CPU on the
       // one-split fixture scan), not the pair loop the r18 fanOut
-      // spread. Fanning the scan out runs quant at the core dial and
-      // the pair join then needs NO second exchange (both q and c read
-      // the same fanned frame — one shared exchange). Identity on a
-      // multi-split lake (Tables scaladoc); quant arithmetic unchanged.
+      // spread. Fanning the scan out runs quant at the core dial. The
+      // plan holds TWO round-robin exchanges, one per join side: the
+      // `vec_id < 10` filter is pushed below the probe side's exchange,
+      // so the two sides' exchanges differ and are not reused (the
+      // probe side's is 10 rows). Identity on a multi-split lake
+      // (Tables scaladoc); quant arithmetic unchanged.
       val quant = Tables.fanOut(Tables.embeddings(s, d))
         .select(col("vec_id"), col("embedding"),
           sqrt(norm2(col("embedding"))).as("n"))
@@ -1104,7 +1106,8 @@ object Vectors extends Q.Module {
     // Memo outlives the harness's per-query clearCache, which would
     // empty a CacheManager persist and silently recompute (the r14
     // lesson recorded above).
-    val veLoop = Tables.embeddings(s, d)
+    val scan = Tables.embeddings(s, d)
+    val veLoop = scan
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), posexplode(col("embedding"))
         .as(Seq("dim", "x")))
@@ -1160,7 +1163,7 @@ object Vectors extends Q.Module {
     // and a no-op on a multi-split lake where the scan width already
     // matches the data. `ve` stays wide — q317's distance pass is the
     // one genuinely compute-heavy consumer.
-    val w = math.max(1, Tables.embeddings(s, d).rdd.getNumPartitions)
+    val w = math.max(1, Tables.scanWidth(scan))
     ((ve, cent.coalesce(w), asg.coalesce(w)), Seq(ve, cent, asg))
   }
 

@@ -36,8 +36,9 @@ object EventStream {
     * `glob` narrows it to the events files. The fixture's timestamp
     * physical type has varied across driver generations (INT64 nanos vs
     * TIMESTAMP(MICROS) — see Tables.events); a streaming source needs
-    * its schema up front, so a one-file batch peek (footer read only, no
-    * job) picks the matching schema + event-time expression. */
+    * its schema up front, so the batch schema of `dir/glob`
+    * ([[graft.Tables.schemaOf]]: inferred once per fixture stamp, then
+    * cached) picks the matching schema + event-time expression. */
   def fromEventsDir(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): Dataset[Ev] = {
     import spark.implicits._
@@ -53,11 +54,8 @@ object EventStream {
     // and pathGlobFilter (which only ever matches LEAF names) would
     // exclude every one of them.
     val dirLayout = new java.io.File(s"$dir/$glob").isDirectory
-    val nanos = {
-      val peek = if (dirLayout) spark.read.parquet(s"$dir/$glob")
-        else spark.read.option("pathGlobFilter", glob).parquet(dir)
-      peek.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    }
+    val nanos = graft.Tables.schemaOf(spark, s"$dir/$glob")("ts").dataType ==
+      org.apache.spark.sql.types.LongType
     val tsType = if (nanos) "BIGINT" else "TIMESTAMP_NTZ"
     val etime =
       if (nanos) timestamp_micros(expr("ts div 1000"))

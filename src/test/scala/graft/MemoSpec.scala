@@ -107,6 +107,31 @@ class MemoSpec extends SparkSuite {
     assert(get(s1) == 3 && builds == 3)
   }
 
+  test("a new session supersedes a checkpoint-holding entry on a live context") {
+    // The superseded entry's checkpoint is released (its context is
+    // live) and the new session's build is served, without error.
+    val dir = tmpFixtureDir()
+    writeTable(dir, "t", 16)
+    def get(s: org.apache.spark.sql.SparkSession) =
+      Memo.cached[org.apache.spark.sql.DataFrame](
+        s, dir.getPath, "memospec-supersede", Seq("t")) {
+        val d = s.range(10).toDF().localCheckpoint(true)
+        (d, Seq(d))
+      }
+    def rddIds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }
+    val first = get(spark.newSession())
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    assert(rddIds(first).nonEmpty && rddIds(first).forall(persisted))
+    val second = get(spark.newSession())
+    assert(second ne first)
+    assert(second.count() == 10)
+    assert(!rddIds(first).exists(spark.sparkContext.getPersistentRDDs.contains),
+      "the superseded entry's checkpoint must be released")
+  }
+
   test("a memoized localCheckpoint frame survives catalog clearCache") {
     val dir = tmpFixtureDir()
     writeTable(dir, "t", 16)
