@@ -143,23 +143,28 @@ object Bench {
     // the first entry that would push the record line past ~1.5 kB —
     // safely inside the tail even with sbt's trailer line and shutdown
     // noise. The full 3-decimal map still goes to queries_file + stderr;
-    // nothing is removed or renamed, entries are only added.
+    // nothing is removed or renamed, entries are only added. Failed
+    // queries (the -1 sentinel) stay out of it — "failed" counts them —
+    // and "queries_inline_n" says how many entries made the budget, so a
+    // consumer can tell a partial map from a full one (< n - failed).
     def r2(v: Double): String =
       BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val inlineBudget = 1250
     val inline = new StringBuilder
-    val bySlowest = results.toSeq.sortBy { case (k, v) => (-v, k) }
+    val bySlowest = results.toSeq.filter(_._2 >= 0).sortBy { case (k, v) => (-v, k) }
     var full = true
+    var inlineN = 0
     bySlowest.foreach { case (k, v) =>
       if (full) {
         val e = "\"" + k.takeWhile(_ != '_').drop(1) + "\":" + r2(v)
         if (inline.length + e.length + 1 <= inlineBudget) {
           if (inline.nonEmpty) inline.append(',')
           inline.append(e)
+          inlineN += 1
         } else full = false
       }
     }
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"runs":$runs,"n":${results.size},"mode":"min-of-runs;sink-once","queries":{$inline},"queries_file":"$qFile","sf":"$sfName"$isolated}"""
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"runs":$runs,"n":${results.size},"mode":"min-of-runs;sink-once","queries":{$inline},"queries_inline_n":$inlineN,"queries_file":"$qFile","sf":"$sfName"$isolated}"""
     try spark.stop()
     catch { case e: Throwable =>
       System.err.println(s"[bench] spark.stop failed: ${e.getClass.getSimpleName}")

@@ -31,9 +31,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_flagship_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * first runs [[prepare]] on the session it is given, so every caller
+    * of the registry (Verify, Bench, tools, specs, the benchmark harness)
+    * plans on the same session setup. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map { q =>
+      q.name -> { (s: SparkSession, d: String) => prepare(s); q.fn(s, d) }
+    }.toMap
+
+  /** Idempotent session prep, cheap enough to run before every query:
+    *  - `spark.sql.legacy.parquet.nanosAsLong`, which [[Tables.events]]
+    *    needs, is set before the first table loads. It is part of the
+    *    [[Tables]] schema-cache key, so setting it later would make every
+    *    table loaded before the first events read be inferred again. Only
+    *    `events.ts` can be `TIMESTAMP(NANOS)`; every other fixture
+    *    timestamp is µs, which the conf leaves alone.
+    *  - the [[graft.plans.SmallSort]] planner strategy is installed.
+    */
+  def prepare(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.plans.SmallSort.register(spark)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

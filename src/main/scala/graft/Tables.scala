@@ -27,9 +27,9 @@ import graft.operators.Memo
   *    temp dirs, a sink rewritten in place) is inferred again;
   *  - the session's values of every conf that changes what inference
   *    returns (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
-  *    `spark.sql.caseSensitive`) — [[events]] sets
-  *    `spark.sql.legacy.parquet.nanosAsLong`, which decides the `ts`
-  *    type.
+  *    `spark.sql.caseSensitive`) — `spark.sql.legacy.parquet.nanosAsLong`
+  *    decides the `ts` type; [[SparkEntry.prepare]] sets it before the
+  *    first load, so it does not change the key mid-session.
   * A declared schema is safe at the 100 TB design point: the cached
   * schema IS the inferred one (all columns, nullable, partition columns
   * last, exactly as a bare read gives them — TablesSchemaSpec pins
@@ -112,7 +112,7 @@ object Tables {
     * the oracles are unaffected by the fixture generation.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    SparkEntry.prepare(s) // sets nanosAsLong for direct callers
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw // nanos fixture

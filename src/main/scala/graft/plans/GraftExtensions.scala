@@ -21,8 +21,10 @@ import graft.functions.{CosineSimilarity, FunctionArity, IntDotProduct, SignLshB
   * imperatively, but at the right lifecycle point: the optimizer rule
   * rides every session built from the context (injectOptimizerRule runs
   * it in the same post-batches slot as `experimental.extraOptimizations`),
-  * and the four codegen'd functions are in the registry before any SQL
-  * text parses, so `cosine_sim` / `int_dot` / `lsh_bucket` /
+  * the [[SmallSort]] planner strategy runs ahead of the built-in
+  * strategies (as `experimental.extraStrategies` does), and the four
+  * codegen'd functions are in the registry before any SQL text parses,
+  * so `cosine_sim` / `int_dot` / `lsh_bucket` /
   * `graft_might_contain` work from pure-SQL clients that never touch the Scala API.
   *
   * The imperative `register(spark)` helpers stay — tests and notebook
@@ -33,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => ThresholdLevenshteinRule)
+    ext.injectPlannerStrategy(_ => SmallSort)
 
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),

@@ -42,7 +42,7 @@ object EventStream {
   def fromEventsDir(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): Dataset[Ev] = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.SparkEntry.prepare(spark) // nanosAsLong, as Tables.events
     // Two fixture layouts: the driver writes events as ONE FILE named
     // events.parquet (pathGlobFilter matches the leaf file name inside
     // the fixture dir), while GenSf1's decade fixtures write a

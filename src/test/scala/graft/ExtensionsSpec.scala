@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *   1. all four injected functions resolve from PURE SQL TEXT — no
   *      Scala-side register(spark) call anywhere on this session;
   *   2. the optimizer rule fires on a parquet-backed naive levenshtein
-  *      bound exactly as the imperatively-installed rule does.
+  *      bound exactly as the imperatively-installed rule does;
+  *   3. the SmallSort planner strategy is the same object on both routes.
   */
 class ExtensionsSpec extends SparkSuite {
 
@@ -82,4 +83,17 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
+  test("the SmallSort strategy is the same object on both routes") {
+    val small = graft.plans.SmallSort
+    withExtSession { s2 =>
+      assert(s2.sessionState.planner.strategies.count(_ eq small) == 1)
+      val df = s2.range(100).orderBy(col("id").desc)
+      assert(df.head() == 99L)
+      assert(df.queryExecution.executedPlan.toString.contains("Gather"))
+    }
+    small.register(spark)
+    small.register(spark) // idempotent
+    assert(spark.experimental.extraStrategies.count(_ eq small) == 1)
+    assert(spark.sessionState.planner.strategies.count(_ eq small) == 1)
+  }
 }

@@ -2,11 +2,9 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -26,41 +24,6 @@ class TablesSchemaSpec extends SparkSuite {
     val d = Files.createTempDirectory("tablesschema").toFile
     d.deleteOnExit()
     d
-  }
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  /** Number of Spark jobs started while `body` runs. Listener delivery
-    * is asynchronous, so a sentinel job fences each end: events arrive
-    * in order, and every job counted started between the two fences. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def fence(tag: String): Int = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      Iterator.continually(started.poll(30, TimeUnit.SECONDS))
-        .map(d => Option(d).getOrElse(fail(s"fence $tag never started")))
-        .takeWhile(_ != tag).size
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("tables-schema-open")
-      body
-      fence("tables-schema-close")
-    } finally sc.removeSparkListener(listener)
   }
 
   test("(a) a cached load has the bare read's schema, for every fixture table") {
