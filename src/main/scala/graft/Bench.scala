@@ -1,36 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width defaults to the core count (the driver-gate config)
-    // but the decade receipts override it UP: at sf100 a 600M-row
-    // distinct on 32 reduce partitions put ~19M rows in each task's
-    // aggregate map and the 48g heap OOM'd nondeterministically (r18
-    // q332). A real cluster never runs shuffle.partitions == cores at
-    // 100 TB — partitions are sized to the DATA (AQE coalesces the
-    // excess) — so the receipt config gets the same dial.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Pin UTC like Verify/SparkSuite: Tables.events normalizes the
-      // micros fixture through TIMESTAMP in the session zone, so an
-      // unpinned zone on a non-UTC host would shift the ts contract.
-      .config("spark.sql.session.timeZone", "UTC")
-      // Compress serialized RDD caches: the DISK_ONLY edge checkpoints
-      // of the iterative operators (PageRank's src-pinned pin) are long
-      // pairs that compress ~3x, and the sf100 receipt died with the
-      // UNcompressed pin + setup shuffles within a rounding error of
-      // the whole spill disk. Deserialized caches (Memo, persist) are
-      // unaffected by this flag. A production cluster sets it for the
-      // same reason.
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Optional trailing query names restrict the run (local profiling);
     // the driver passes none. Queries run in sorted name order so timings
     // are comparable across rounds.
@@ -51,12 +23,7 @@ object Bench {
       val times = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
         try {
-          val df = fn(spark, sfDir)
-          // Plan review mode: SPARK_GRAFT_EXPLAIN=1 dumps the physical plan.
-          if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")) {
-            System.err.println(s"===== $name ====="); df.explain("formatted")
-          }
-          df.count()
+          fn(spark, sfDir).count()
           Some((System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}")

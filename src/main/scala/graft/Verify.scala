@@ -10,28 +10,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // Optional trailing query names restrict the run (local iteration).
     val only: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Compress serialized RDD caches: the DISK_ONLY edge checkpoints
-      // of the iterative operators (PageRank's src-pinned pin) are long
-      // pairs that compress ~3x, and the sf100 receipt died with the
-      // UNcompressed pin + setup shuffles within a rounding error of
-      // the whole spill disk. Deserialized caches (Memo, persist) are
-      // unaffected by this flag. A production cluster sets it for the
-      // same reason.
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Correctness runs always take the exact audit path: see
-    // Vectors.honorAuditAnnEnv. Warn so a confused local run is visible.
-    graft.queries.Vectors.honorAuditAnnEnv = false
-    if (sys.env.contains("SPARK_GRAFT_AUDIT_ANN"))
-      System.err.println("[verify] SPARK_GRAFT_AUDIT_ANN is set but " +
-        "ignored: oracle runs always use the exact audit path")
+    val spark = Session.local()
     val failed = run(spark, sfDir, outDir, SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) })
     spark.stop()

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * O(log² n) rounds (a handful in practice, even on path graphs).
   * This replaces the r11 propagate+single-shortcut scheme, whose
   * "doubling" degenerated to a linear min-label crawl on filament
-  * chains with position-random ids (Prof269 measured 25 iterations
-  * without fixpoint on a 1,052-node ε-graph; see PLANS.md r12 for the
+  * chains with position-random ids (25 iterations without fixpoint on
+  * q269's 1,052-node ε-graph; PLANS.md Round 12 records the
   * before/after traces). A plain propagation loop looks correct on
   * clique-like duplicate clusters (diameter ≤ 2) and silently
   * under-merges long chains — the property test drives a 30-node path
@@ -67,12 +67,11 @@ object ConnectedComponents {
     *               that must not ship an under-merged clustering (q76,
     *               q269) detect non-convergence programmatically rather
     *               than relying on a stderr line the harness may drop.
-    * @param verbose per-round stderr timing + fingerprint (Prof269).
     * @return (id, cluster) — cluster is the minimum id reachable from id;
     *         isolated nodes (absent from pairs) are absent here too.
     */
-  def run(pairs: DataFrame, maxIter: Int = 25, strict: Boolean = false,
-      verbose: Boolean = false): DataFrame = {
+  def run(pairs: DataFrame, maxIter: Int = 25, strict: Boolean = false)
+      : DataFrame = {
     val cols = pairs.columns
     // Canonical child-larger orientation (u > v), self-loops dropped,
     // dedup'd: both star rewrites below preserve this orientation, so
@@ -92,7 +91,6 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       // ---- large-star: attach larger neighbors to the neighborhood min.
       // Aliases are load-bearing: repeated self-derived joins otherwise
       // trip the ambiguous-attribute check.
@@ -133,9 +131,6 @@ object ConnectedComponents {
       lsGen.unpersist(blocking = false)
       edges = ssC
       gen = ssGen
-      if (verbose) System.err.println(
-        f"[cc] round $iter edges=${cur._1} fp=${cur._2} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
       iter += 1
     }
     // At the star fixpoint every edge is (child, component-min root):

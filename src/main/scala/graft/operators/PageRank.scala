@@ -182,7 +182,7 @@ object PageRank {
     //     before anything AGGREGATES over it: at sf10 (117M edges) the
     //     default deserialized cache is ~7.5 GB of an 8 GB unified pool
     //     and the degree aggregate dies with AGGREGATE_OUT_OF_MEMORY
-    //     (measured live by tools/ProfEdge) — so above
+    //     (PLANS.md Round-14 item 3) — so above
     //     [[EdgeCacheMaxRows]] the decision is made from the count alone
     //     and deg is computed only AFTER the cache moves to disk.
     //  2. Otherwise the node count (deg.count(), safe over a small

@@ -316,7 +316,7 @@ object Dedup extends Q.Module {
       .withColumn("bandval", expr(s"shiftrightunsigned(fp, b * $bits) & ${(1L << bits) - 1}"))
 
   /** Band-bucket size cap for the edit-distance candidate kernels
-    * (q78/q84): tools/ProfBuckets measured the fixture maxima at 8/6/32
+    * (q78/q84): the fixture maxima are 8/6/32 (PLANS.md Round-14 item 8)
     * (sf0.001/0.01/0.1) — 64 is provably inactive at every fixture SF —
     * while the replica-correlated decades blow past it (sf1 max 810,
     * sf10 max 8,223 with Σc² = 5.2e9 candidate pairs, the 558 s r13
@@ -351,7 +351,7 @@ object Dedup extends Q.Module {
     *    pairs — at that multiplicity the right operator is exact dedup
     *    (q46), not a near-dup kernel.
     *
-    * At every fixture SF both caps are inactive (ProfBuckets: max
+    * At every fixture SF both caps are inactive (PLANS.md r14: max
     * bucket 32 ≤ 64 at sf0.1, 8 below; sf1/sf10 maxima 810/8,223 are
     * the decades the cap exists for), and an identical fp implies the
     * same bucket in every band with nsub = 1, so the fp channel is

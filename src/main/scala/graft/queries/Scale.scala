@@ -286,26 +286,17 @@ object Scale extends Q.Module {
         graft.functions.TopCells.topCells(col("embedding"), cidsL, cesL, np)
           .as("top"))
     }
-    // Stage timing behind an env flag (Prof50's decomposition hook).
-    def prof[A](name: String)(f: => A): A =
-      if (sys.env.get("SPARK_GRAFT_IVF_PROF").contains("1")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[ivf] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      } else f
-    var cents = prof("seeds") {
-      sample.orderBy(col("h"), col("vec_id")).limit(k)
-        .select(col("vec_id").as("cid"),
-          transform(col("qe"), v => (v.cast("double") / 64).cast("float")).as("ce"))
-        .collect()
-    }
-    for (it <- 1 to ivfIters) {
+    var cents = sample.orderBy(col("h"), col("vec_id")).limit(k)
+      .select(col("vec_id").as("cid"),
+        transform(col("qe"), v => (v.cast("double") / 64).cast("float")).as("ce"))
+      .collect()
+    for (_ <- 1 to ivfIters) {
       // The fused top-1 argmax is a projection; qe rides the same
       // SAMPLE-sized frame instead of every scored candidate.
       val asn1 = assignTop(sample, cents, 1)
         .select(col("vec_id"), element_at(col("top"), 1).as("cid"))
         .join(sample.select(col("vec_id"), col("qe")), Seq("vec_id"))
-      cents = prof(s"lloyd iter $it") { updateCentroids(asn1).collect() }
+      cents = updateCentroids(asn1).collect()
     }
     // Full-corpus top-nprobe assignment: one fused projection per
     // vector; the only exchange anywhere downstream carries the N·nprobe
@@ -322,11 +313,7 @@ object Scale extends Q.Module {
       .select(col("vec_id"), posexplode_outer(col("top")))
       .select(col("vec_id"), (col("pos") + 1).as("rn"), col("col").as("cid"))
       .persist()
-    prof("asn materialize") { asn.count() }
-    if (sys.env.get("SPARK_GRAFT_IVF_PROF").contains("1"))
-      System.err.println("[ivf] asn executed plan:\n" +
-        asn.queryExecution.executedPlan.toString.split("\n")
-          .take(70).map(l => l.take(150)).mkString("\n"))
+    asn.count()
     // sample stays persisted until the harness's per-query clearCache:
     // trained's lineage reads it ~5× (seeds + 2 legs per Lloyd iter),
     // and execution is lazy — an eager unpersist here would run before

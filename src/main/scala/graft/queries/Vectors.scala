@@ -66,8 +66,11 @@ object Vectors extends Q.Module {
     * fixture dir), not a per-query flag: fixture SFs (≤ 2k vectors)
     * stay exact, so every oracle hash is bit-identical to r13; the
     * decades above flip to the shortlist automatically — exactly how a
-    * 100 TB deployment would run these audits. SPARK_GRAFT_AUDIT_ANN
-    * (on/off) overrides for A/B measurement. */
+    * 100 TB deployment would run these audits. The gate is the only
+    * decider on the registry path: nothing global or environmental can
+    * flip an oracle run into the approximate mode. Specs and A/B
+    * measurements pick a mode per call through the `forceAnn`
+    * parameter. */
   private val AuditAnnMinCorpus = 10000L
   private val AuditNProbe = 4
 
@@ -84,35 +87,21 @@ object Vectors extends Q.Module {
     * Never set outside tests. */
   @volatile private[graft] var dbscanForceGrid = false
 
-  /** Verify (the oracle gate) sets this false at startup: the audit
-    * oracles are written for the exact path at fixture scale, so a
-    * stray SPARK_GRAFT_AUDIT_ANN=on in the environment would silently
-    * flip q287/q305/q311/q320 into the approximate mode and fail four
-    * hash checks that have nothing wrong with them. Bench and the
-    * profiling tools keep honoring the env override (it exists for
-    * their A/B measurements). */
-  @volatile private[graft] var honorAuditAnnEnv = true
-
   /** Shared corpus-size gate (r15 verdict #2 widened it beyond the
     * audit family — q50's embedding near-dup and q64's ml-LSH baseline
     * ride the same dial): exact/brute below [[AuditAnnMinCorpus]] rows
     * (every fixture-SF oracle hash bit-identical), banded/IVF above.
-    * Same env override, same Verify kill-switch, same content-stamped
-    * Memo staleness contract for every caller. */
+    * Same content-stamped Memo staleness contract for every caller:
+    * keyed on the fixture's content stamp (not a plain per-dir map), so
+    * a dir regenerated at a different scale in the same JVM (GenSf1
+    * chains sf1 -> sf10) re-counts instead of serving a stale gate
+    * decision (r14 advice). */
   private[queries] def corpusExceedsAnnGate(s: SparkSession, d: String,
       table: String, load: (SparkSession, String) => DataFrame): Boolean =
-    (if (honorAuditAnnEnv) sys.env.get("SPARK_GRAFT_AUDIT_ANN") else None) match {
-      case Some("on")  => true
-      case Some("off") => false
-      // Memo (not a plain per-dir map): keyed on the fixture's content
-      // stamp, so a dir regenerated at a different scale in the same
-      // JVM (GenSf1 chains sf1 -> sf10) re-counts instead of serving a
-      // stale gate decision (r14 advice).
-      case _ => graft.operators.Memo.cached[java.lang.Long](
-        s, d, s"${table}Count", Seq(table)) {
-          (Long.box(load(s, d).count()), Nil)
-        } > AuditAnnMinCorpus
-    }
+    graft.operators.Memo.cached[java.lang.Long](
+      s, d, s"${table}Count", Seq(table)) {
+        (Long.box(load(s, d).count()), Nil)
+      } > AuditAnnMinCorpus
 
   private[queries] def auditUseAnn(s: SparkSession, d: String): Boolean =
     corpusExceedsAnnGate(s, d, "embeddings", Tables.embeddings)

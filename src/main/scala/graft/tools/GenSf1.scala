@@ -52,28 +52,30 @@ object GenSf1 {
     // dominate the generation wall for receipts that never scan it. A
     // partial dir is receipt-grade only: full-registry runs need every
     // table.
+    val tables = args.lift(2)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    generate(graft.Session.local(), src, out, tables)
+  }
+
+  /** Writes the 10× fixture of `src` into `out` with the caller's
+    * session, changing none of its runtime confs beyond
+    * [[graft.SparkEntry.prepare]]. `tables` restricts the output to a
+    * subset (None = all ten). */
+  def generate(s: SparkSession, src: String, out: String,
+      tables: Option[Set[String]] = None): Unit = {
     val knownTables = Set("region", "nation", "customer", "supplier",
       "part", "orders", "lineitem", "events", "documents", "embeddings")
-    val want: String => Boolean = args.lift(2) match {
-      case Some(list) =>
-        val asked = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        // Fail FAST on a typo (r16 advice): 'embedings' would otherwise
-        // produce a partial decade dir silently missing the intended
-        // table, surfacing only as a downstream AnalysisException far
-        // from the cause (q331's first sf100 attempt was this class).
-        val unknown = asked -- knownTables
-        require(unknown.isEmpty,
-          s"unknown table(s) ${unknown.toSeq.sorted.mkString(", ")} - " +
-            s"known: ${knownTables.toSeq.sorted.mkString(", ")}")
-        asked
-      case None => _ => true
-    }
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // Fail FAST on a typo (r16 advice): 'embedings' would otherwise
+    // produce a partial decade dir silently missing the intended
+    // table, surfacing only as a downstream AnalysisException far
+    // from the cause (q331's first sf100 attempt was this class).
+    val unknown = tables.getOrElse(Set.empty) -- knownTables
+    require(unknown.isEmpty,
+      s"unknown table(s) ${unknown.toSeq.sorted.mkString(", ")} - " +
+        s"known: ${knownTables.toSeq.sorted.mkString(", ")}")
+    val want: String => Boolean = tables.getOrElse(knownTables)
+    // nanosAsLong: the width probe below reads events.parquet bare.
+    graft.SparkEntry.prepare(s)
     new java.io.File(out).mkdirs()
 
     def reps(build: Int => DataFrame): DataFrame =

@@ -1,19 +1,20 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Generic per-job profiler for ANY registry query (r18 optimization
-  * round; not product surface). Runs one named query from
-  * `SparkEntry.queries` exactly as Bench does (same session config,
-  * same `df.count()` action), with a SparkListener that records every
+/** The per-job profiler for any registry query (not product surface;
+  * `perfbench/run.py --trace 1` gives the per-layer counts of the
+  * benchmark workloads). Runs one named query from `SparkEntry.queries`
+  * exactly as Bench does (same `Session.local` session, same
+  * `df.count()` action), with a SparkListener that records every
   * job's wall time and first-stage name — so a multi-action query
   * (persists, localCheckpoints, fixpoint probes, per-iteration passes)
   * decomposes into its job ledger instead of one opaque number.
   *
   * Usage: ProfQ <queryName> [dir] [runs]
   *   dir defaults to /root/testdata/sf0.1, runs to 2 (the second run
-  *   shows the warm-plan cost the bench min reports).
+  *   shows the warm-plan cost the bench min reports); the width is
+  *   `SPARK_GRAFT_CPUS` (default 4), as for Bench.
   */
 object ProfQ {
   def main(args: Array[String]): Unit = {
@@ -21,13 +22,7 @@ object ProfQ {
     val qname = args(0)
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Session.local()
     val fn = graft.SparkEntry.queries(qname)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     s.sparkContext.addSparkListener(new SparkListener {

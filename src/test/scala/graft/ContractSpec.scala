@@ -62,6 +62,34 @@ class ContractSpec extends SparkSuite {
     assert(md.contains(s"$suites suites"), s"README suite count drifted from $suites")
   }
 
+  // The session builder and the SPARK_GRAFT_* env reads once had a
+  // hand-copy per main, and the copies drifted (the tests lacked
+  // spark.rdd.compress, Verify ignored SPARK_GRAFT_SHUFFLE_PARTITIONS).
+  test("one session builder and one place reading SPARK_GRAFT_* env") {
+    import scala.jdk.CollectionConverters._
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    def isComment(l: String): Boolean =
+      Seq("//", "*", "/*").exists(l.trim.startsWith)
+    // (file name, line) for every line that is not a comment line
+    val code = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.filterNot(isComment)
+        .map(f.getFileName.toString -> _)
+    }
+    def filesWith(needle: String): Set[String] =
+      code.collect { case (f, l) if l.contains(needle) => f }.toSet
+    assert(filesWith("SparkSession.builder()") == Set("Session.scala"))
+    assert(filesWith("\"SPARK_GRAFT_").subsetOf(
+      Set("Session.scala", "Bench.scala")),
+      s"SPARK_GRAFT_* read in ${filesWith("\"SPARK_GRAFT_")}")
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.rdd.compress", "false") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("oracle SQL mentions only fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

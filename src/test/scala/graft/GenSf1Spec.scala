@@ -13,7 +13,13 @@ class GenSf1Spec extends SparkSuite {
   test("GenSf1 output preserves row counts, FK validity, and replica semantics") {
     val out = java.nio.file.Files.createTempDirectory("gensf1spec").toString
     try {
-      graft.tools.GenSf1.main(Array(sfDir, out))
+      // The generator runs on the shared session and must leave its
+      // runtime confs alone: a builder-side .config() on getOrCreate
+      // rewrites them for every suite that runs after this one.
+      val shuffleBefore = spark.conf.get("spark.sql.shuffle.partitions")
+      graft.tools.GenSf1.generate(spark, sfDir, out)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == shuffleBefore,
+        "GenSf1 changed the shared session's shuffle partitions")
 
       def cnt(t: String): Long = spark.read.parquet(s"$out/$t.parquet").count()
       def src(t: String): Long = spark.read.parquet(s"$sfDir/$t.parquet").count()

@@ -115,12 +115,25 @@ class OperatorPropertySpec extends SparkSuite {
         Seq((4L, 10L)),
       // random sparse graph
       Seq.fill(40)((rng.nextInt(50).toLong, rng.nextInt(50).toLong))
-        .filter { case (a, b) => a != b })
+        .filter { case (a, b) => a != b },
+      // a 2,001-node path whose ids are scrambled relative to chain
+      // position by a multiplicative bijection on 0..n (7919 is prime
+      // and does not divide n + 1): the worst case for min-label
+      // propagation, which needs O(n) rounds here
+      { val n = 2000L
+        val scramble = (i: Long) => (i * 7919L) % (n + 1)
+        (0L until n).map(i => (scramble(i), scramble(i + 1))) },
+      // a seeded random graph past the giant-component threshold (mean
+      // degree 3): one large component plus fragments, the near-dup
+      // clustering regime
+      { val r = new Random(97)
+        Seq.fill(3000)((r.nextInt(2000).toLong, r.nextInt(2000).toLong))
+          .filter { case (a, b) => a != b } })
     graphs.foreach { edges =>
       val got = graft.operators.ConnectedComponents
         .run(edges.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap
-      assert(got == unionFind(edges), s"edges=$edges")
+      assert(got == unionFind(edges), s"edges=${edges.take(50)}")
     }
   }
 
