@@ -35,27 +35,18 @@ import org.apache.spark.sql.functions._
   * and only a loop-termination probe, never part of the result, so its
   * hash function needs no cross-engine story.
   *
-  * Iteration hygiene (the r11 lesson, measured as geometric
-  * per-iteration cost growth): every generation is materialized into an
-  * EXPLICITLY HELD cache via `cut` below and the superseded generation
-  * is released the moment its successor is materialized. Relying on
-  * GC + ContextCleaner frees nothing inside a tight driver loop — dead
-  * cached blocks accumulated across 25 generations were the dominant
-  * cost of the r11 q269 run. `cut` also truncates lineage (the round
-  * references its input three times, so an uncut logical plan grows
-  * exponentially in round count — persist alone caches data but keeps
-  * the full plan).
+  * Iteration hygiene: every generation is a local checkpoint and the
+  * superseded one is released through [[Gen.release]] the moment its
+  * successor is materialized (the r11 lesson, and the reason the
+  * checkpoint and not a persist — see Gen). The round references its
+  * input three times, so an uncut plan would grow exponentially in
+  * round count.
   *
   * Scale notes (100 TB / 1e9 nodes): both star rewrites shuffle on node
   * id — the same partitioning every round, so AQE reuses exchange
   * layouts; edge sets only shrink (dedup + re-attachment toward minima).
-  * In a fault-tolerant production run, swap the `cut` cache for a
-  * reliable `checkpoint()` against a checkpoint dir — same shape,
-  * survives executor loss.
   */
 object ConnectedComponents {
-
-  import Gen.cut // explicit cache-and-cut; contract documented on Gen
 
   /** @param pairs two-column frame of undirected edges (any orderable id
     *              type); symmetrized/canonicalized internally.
@@ -86,8 +77,8 @@ object ConnectedComponents {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    var (edges, gen) = cut(e0)
-    var prev = fingerprint(edges) // materializes the initial cut
+    var edges = e0.localCheckpoint(eager = false)
+    var prev = fingerprint(edges) // materializes the initial generation
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -102,16 +93,13 @@ object ConnectedComponents {
         .select(col("b").as("u"), col("m").as("v")).distinct()
       // ls is referenced twice by small-star (min aggregate + join);
       // cutting it keeps each leg single-execution AND bounds the plan.
-      // The cut cache is materialized LAZILY (r18): the round's one
-      // fingerprint action computes it as a side effect — its two
-      // consumer stages run inside that same job, and the block
-      // manager's per-partition loading locks make whichever task
-      // arrives second wait for (not recompute) the partition — so the
-      // former eager `lsGen.count()` was one whole scheduling
-      // round-trip per CC round that bought nothing. At ~0.1-0.3 s of
-      // driver/dispatch latency per job on the bench host, dropping it
-      // is worth ~1 job × rounds × every CC caller (q76/q269).
-      val (lsC, lsGen) = cut(ls)
+      // The checkpoint is LAZY (r18): the round's one fingerprint action
+      // materializes it as a side effect — its two consumer stages run
+      // inside that same job, and the block manager's per-partition
+      // loading locks make whichever task arrives second wait for (not
+      // recompute) the partition — so an eager checkpoint would be one
+      // whole scheduling round-trip per CC round that buys nothing.
+      val lsC = ls.localCheckpoint(eager = false)
       // ---- small-star: u > all of N⁻(u), so m = min(N⁻(u)) directly;
       // re-attach the smaller neighbors and u itself, dropping the
       // (m, m) self-loop. Output stays child-larger by construction.
@@ -121,16 +109,15 @@ object ConnectedComponents {
         .unionByName(ssMin.select(col("u").as("cu"), col("m").as("cv")))
         .filter(col("cu") =!= col("cv"))
         .select(col("cu").as("u"), col("cv").as("v")).distinct()
-      val (ssC, ssGen) = cut(ss)
+      val ssC = ss.localCheckpoint(eager = false)
       val cur = fingerprint(ssC) // materializing action for this round
       converged = cur == prev
       prev = cur
       // The superseded generations are dead from here on — release them
       // now; ContextCleaner would not (no GC in a tight driver loop).
-      gen.unpersist(blocking = false)
-      lsGen.unpersist(blocking = false)
+      Gen.release(edges)
+      Gen.release(lsC)
       edges = ssC
-      gen = ssGen
       iter += 1
     }
     // At the star fixpoint every edge is (child, component-min root):
@@ -140,11 +127,8 @@ object ConnectedComponents {
     val labels = edges.select(col("u").as("id"), col("v").as("cluster"))
       .unionByName(edges.select(col("v").as("id"), col("v").as("cluster")))
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-    // The final generation's cache stays live — `labels` scans it. It is
-    // session-lifetime like any returned lazy frame; callers that want
-    // it gone materialize their derivation and release via the usual
-    // harness clearCache. (All intermediate generations were already
-    // released above — nothing else leaks.)
+    // The final generation's checkpoint stays live — `labels` scans it.
+    // (All intermediate generations were released above.)
     if (!converged) {
       val msg = s"[ConnectedComponents] no fixpoint after $maxIter rounds — " +
         "labels may be under-merged; raise maxIter"

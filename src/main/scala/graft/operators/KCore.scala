@@ -24,19 +24,14 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one degree aggregate (map-side combined,
   * node-sized output) + two semi-joins filtering the edge list (the
   * survivor set broadcasts when node-sized allows — Catalyst's call).
-  * Every round ends with an explicit cache-and-cut: the next round
+  * Every round ends with a local-checkpoint generation: the next round
   * references the surviving edges through BOTH the degree aggregate and
   * the edge filter, so an un-truncated plan doubles per round — the
   * ConnectedComponents lesson (exponential analyzer time), not a
-  * performance nicety. The cut holds its own cache handle and the
-  * superseded generation is released inside the loop — ContextCleaner
-  * frees nothing in a tight driver loop, so `localCheckpoint` (the r11
-  * shape) accumulated every dead generation for the run's lifetime.
-  * Production swaps reliable `checkpoint()`.
+  * performance nicety. The superseded generation is released inside
+  * the loop through [[Gen.release]] (see Gen for why).
   */
 object KCore {
-
-  import Gen.cut // explicit cache-and-cut; contract documented on Gen
 
   /** @param edges distinct undirected pairs (x, y), one row per edge
     *              (x < y canonical form recommended; self-loops illegal).
@@ -45,8 +40,11 @@ object KCore {
     *         (round produced no removals) — (nodes, converged).
     */
   def run(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Boolean) = {
-    var (e, gen) = cut(edges.select(col("x"), col("y")))
-    var prevCount = gen.count() // eager initial materialization
+    // Row count of a generation off its checkpoint blocks: the count
+    // job materializes the lazy checkpoint (see Gen.blocks).
+    def rows(g: DataFrame): Long = Gen.blocks(g).map(_.count()).sum
+    var e = edges.select(col("x"), col("y")).localCheckpoint(eager = false)
+    var prevCount = rows(e)
     var converged = false
     var round = 0
     while (round < rounds && !converged) {
@@ -57,22 +55,20 @@ object KCore {
         .join(keep.withColumnRenamed("n", "x"), Seq("x"), "semi")
         .join(keep.withColumnRenamed("n", "y"), Seq("y"), "semi")
         .select(col("x"), col("y"))
-      val (nC, nGen) = cut(next)
+      val nC = next.localCheckpoint(eager = false)
       // one scalar action per round — the justified fixpoint probe
       // (CC's pattern); edge counts only ever shrink, so an unchanged
       // count means no node was removed.
-      val n = nGen.count()
+      val n = rows(nC)
       converged = n == prevCount
       prevCount = n
-      gen.unpersist(blocking = false) // superseded generation, dead now
+      Gen.release(e) // superseded generation, dead now
       e = nC
-      gen = nGen
       round += 1
     }
     val deg = e.select(col("x").as("node")).union(e.select(col("y")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    // `deg` scans the final generation's cache; harness-owned release
-    // (Verify/Bench clearCache) or the caller's action-then-clear.
+    // `deg` scans the final generation's checkpoint, which stays live.
     (deg, converged)
   }
 }

@@ -23,8 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * chains to sf10) or a fresh SparkSession (a stopped session's cached
   * blocks are gone) rebuilds instead of serving a stale or poisoned
   * frame. A superseded entry's checkpoint blocks are released via
-  * [[Gen.releaseLocalCheckpoint]] the moment the stamp mismatch is
-  * seen.
+  * [[Gen.release]] the moment the stamp mismatch is seen.
   *
   * At the 100 TB design point the same shape holds per JOB rather than
   * per JVM: the shared build becomes a reliable `checkpoint()`/written
@@ -71,7 +70,7 @@ private[graft] object Memo {
       entries.get(k) match {
         case Some(e) if e.stamp == stamp => e.value.asInstanceOf[T]
         case prior =>
-          prior.foreach(_.held.foreach(Gen.releaseLocalCheckpoint))
+          prior.foreach(_.held.foreach(Gen.release))
           val (v, held) = build
           entries.put(k, Entry(stamp, v, held))
           v
@@ -87,16 +86,11 @@ private[graft] object Memo {
   private def sessionId(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => { sessionsSeen += 1; s"s$sessionsSeen" })
 
-  /** Release a frame produced by `Dataset.localCheckpoint` — the
-    * queries-package door to [[Gen.releaseLocalCheckpoint]] for builds
-    * that retire their own intermediate generations. */
-  def release(df: DataFrame): Unit = Gen.releaseLocalCheckpoint(df)
-
   /** Drop every entry and release its checkpoint blocks (test/tool
     * hook; the bench harness never needs it — entries are bounded by
     * #(key, dir) pairs and self-supersede on fixture regeneration). */
   def clear(): Unit = synchronized {
-    entries.values.foreach(_.held.foreach(Gen.releaseLocalCheckpoint))
+    entries.values.foreach(_.held.foreach(Gen.release))
     entries.clear()
   }
 }

@@ -44,10 +44,12 @@ import org.apache.spark.sql.types.DoubleType
   * can demote the join. When |V| outgrows the broadcast ceiling
   * ([[PageRank.BroadcastRanksMaxNodes]]) the operator AUTO-SELECTS the
   * shuffle escape (r14; override with `broadcastRanks = Some(b)`): the
-  * edge frame is hash-partitioned by src ONCE at its checkpoint write
-  * and every iteration reuses that layout, so only the node-sized rank
-  * frame moves per iteration. Both strategies are bit-identical
-  * (GraphRetrievalPropertySpec pins it).
+  * edge frame is hash-partitioned by src once at its DISK_ONLY
+  * checkpoint write and joined to the rank frame by a shuffled hash
+  * join. Under AQE the checkpoint does not keep that partitioning, so
+  * each iteration still re-exchanges the edges (ROADMAP direction 4).
+  * Both strategies are bit-identical (GraphRetrievalPropertySpec pins
+  * it).
   *
   * r13 rework receipts (q167, sf0.1, local[32], min-of-3): 6.85 s →
   * 4.21 s. The three levers, in measured order of effect: (1) setup
@@ -66,20 +68,10 @@ import org.apache.spark.sql.types.DoubleType
   * subtree as its own job: left lazy, iteration k's broadcast re-runs
   * iterations 1..k−1 from scratch — a quadratic recompute the r9
   * profile measured as 2× wall on a 5-deep lazy chain. Cutting
-  * makes each broadcast a scan of ~|V| cached rows; superseded
-  * generations are RELEASED inside the loop through the LogicalRDD
-  * handle (the r12 hygiene rule — ContextCleaner frees nothing in a
-  * tight driver loop; see Gen). localCheckpoint rather than Gen.cut
-  * (r18): checkpointing truncates the RDD lineage itself, so each
-  * iteration's shuffle files become GC-reachable garbage as soon as
-  * the generation is superseded — Gen.cut's persist keeps the lineage,
-  * which chained every iteration's ShuffleDependency to the live
-  * generation and accumulated ~120 GB of undeletable shuffle disk
-  * across 10 sf100 iterations (the r17/r18 receipt deaths). It also means the
-  * returned frame no longer references the persisted edges, so the
-  * data-sized setup checkpoints are released explicitly on exit
-  * (r14, via Gen.releaseLocalCheckpoint — production swaps reliable
-  * `checkpoint()` against a checkpoint dir, released by deleting it).
+  * makes each broadcast a scan of ~|V| cached rows. Superseded
+  * generations, and on exit the data-sized setup checkpoints, are
+  * released through [[Gen.release]]; Gen records why a checkpoint and
+  * not a persist (the r17/r18 sf100 shuffle-disk deaths).
   */
 object PageRank {
 
@@ -169,10 +161,7 @@ object PageRank {
     // that planning at 0.35-0.45 s of each iteration's ~0.5 s wall at
     // sf0.1 (execution was ~0.1 s). Cutting to a LogicalRDD makes the
     // per-iteration tree O(1)-sized: join(scan, broadcast(join of two
-    // node-sized scans)) + union(scan) + aggregate. localCheckpoint (not
-    // Gen.cut) keeps the cache in serialized InternalRow form — the edge
-    // frame is data-sized, so Gen.cut's external-Row conversion tax on
-    // every iteration's read would matter here (see Gen). The edge
+    // node-sized scans)) + union(scan) + aggregate. The edge
     // checkpoint itself is declared inside the non-hint branch below —
     // declaring it here would eagerly write the data-sized cache even
     // when the edgeCountHint escape is about to skip it.
@@ -193,9 +182,10 @@ object PageRank {
     // writer (MEMORY_AND_DISK_SER instead heap-OOMs building whole
     // blocks in the MemoryStore), OS page cache serves the 10
     // per-iteration re-reads, and the executor heap stays free for
-    // execution; localCheckpoint's LogicalRDD carries the physical
-    // plan's outputPartitioning, so the pin survives the lineage cut
-    // and each iteration exchanges only the node-sized rank frame.
+    // execution. The pin does NOT survive the lineage cut under AQE:
+    // the checkpoint's LogicalRDD reports UnknownPartitioning(0)
+    // (PlanEvidenceSpec pins it), so every iteration's join exchanges
+    // the edges by src again.
     // The pin derives from the eRaw cache (one read + one shuffle —
     // rebuilding from the source lineage measured +40 s of redundant
     // join/distinct at sf10), with eRaw released the moment the pinned
@@ -224,7 +214,7 @@ object PageRank {
       def pinToDisk(): DataFrame = {
         val pinned = eRaw.repartition(col("src"))
           .localCheckpoint(true, diskLevel)
-        Gen.releaseLocalCheckpoint(eRaw)
+        Gen.release(eRaw)
         pinned
       }
       if (broadcastRanks.contains(true)) (eRaw, degOf(eRaw), true)
@@ -308,10 +298,9 @@ object PageRank {
       // so nodes with no in-edges come out of the sum at exactly 0 —
       // one fewer join (and broadcast job) per generation.
       // Shuffle strategy: hint shuffle_hash on the node-sized rank side —
-      // a plain SMJ would SORT the data-sized edge cache every iteration
-      // (the checkpoint pins partitioning, not ordering), while a
-      // ShuffledHashJoin builds the hash relation from the ~|V|-row rank
-      // partition and streams the co-located edges through it.
+      // a plain SMJ would SORT the data-sized edge cache every iteration,
+      // while a ShuffledHashJoin builds the hash relation from the
+      // ~|V|-row rank partition and streams the edges through it.
       val contribs = e
         .join(if (bcast) broadcast(rpd) else rpd.hint("shuffle_hash"),
           Seq("src"))
@@ -339,24 +328,14 @@ object PageRank {
         .select(col("node"), col("deg"),
           (lit(1.0 - damping) + lit(damping) *
             (col("msum").cast(DoubleType) / lit(1e9))).as("rank"))
-      // Generation cut: eager localCheckpoint, NOT Gen.cut. Gen.cut
-      // persists `df.rdd` with the LINEAGE INTACT, so generation i's
-      // RDD references generation i-1's through the plan chain — every
-      // iteration's two ShuffleDependencies (rpd exchange + node-keyed
-      // aggregate, ~5-12 GB/iteration of disk at the sf100 receipt)
-      // stayed STRONGLY REACHABLE from the live generation, and no
-      // amount of System.gc() could free a single file until the loop
-      // exited: both r17 sf100 attempts and the first r18 one died of
-      // exactly that accumulation (~60 GB by iteration ~8).
-      // localCheckpoint(true) truncates the RDD lineage itself
-      // (markCheckpointed clears the dependency list), so the
-      // superseded generation — and every shuffle hanging off it —
-      // becomes unreachable the moment `ranks` is reassigned.
+      // Generation cut: eager localCheckpoint, which truncates the RDD
+      // lineage, so the superseded generation's shuffle files become
+      // unreachable with it (see Gen).
       val nCk = next.localCheckpoint(true)
       // Superseded generation's blocks: released deterministically via
       // the LogicalRDD-leaf handle (never the FIRST ranks frame — that
       // one scans nodesDeg/deg, which the exit path returns).
-      gen.foreach(Gen.releaseLocalCheckpoint)
+      gen.foreach(Gen.release)
       gen = Some(nCk)
       ranks = nCk
       // Escape path only: with lineage now truncated per generation,
@@ -373,13 +352,13 @@ object PageRank {
     // ContextCleaner get around to it (they rarely do between queries).
     // `deg` stays live: the returned degN frame scans it. The final
     // generation's cache also stays live — the returned ranks
-    // projection scans it (Gen's caller contract); both were eagerly
+    // projection scans it (see Gen); both were eagerly
     // materialized, so nothing released here is recomputed through.
-    Gen.releaseLocalCheckpoint(e)
+    Gen.release(e)
     if (redistributeDangling) {
-      Gen.releaseLocalCheckpoint(nodes)
-      Gen.releaseLocalCheckpoint(sinks)
-      Gen.releaseLocalCheckpoint(nodesDeg) // its own checkpoint here; when
+      Gen.release(nodes)
+      Gen.release(sinks)
+      Gen.release(nodesDeg) // its own checkpoint here; when
       // !redistributeDangling it aliases deg's scan and must NOT be freed
     }
     (ranks.select(col("node"), col("rank")), degN)

@@ -1656,15 +1656,12 @@ object Relational extends Q.Module {
   //     from the seed cohort" over the co-purchase graph (3 bounded
   //     rounds): the graph-distance primitive under influence-radius
   //     and contamination-spread questions, completing the graph family
-  //     (CC q76, PageRank q167, triangles q182, k-core q194). Per round:
-  //     ONE frontier⋈edges equi-join + ONE min-distance aggregate
-  //     (map-combined), then eager localCheckpoint — the CC/PageRank
-  //     lineage rule (a lazily-chained generation re-executes all prior
-  //     rounds). Seeds are node % 7 = 0 (deterministic, same `%` on
-  //     positive ids both engines). Bounded rounds make the result
-  //     well-defined without a fixpoint test: d is the true distance
-  //     for d ≤ 3, everything else is simply absent. The oracle unrolls
-  //     the identical 3 rounds as CTEs (the q194/q214 idiom).
+  //     (CC q76, PageRank q167, triangles q182, k-core q194). The rounds
+  //     are MinPlus.relax with unit weights. Seeds are node % 7 = 0
+  //     (deterministic, same `%` on positive ids both engines). d is the
+  //     true distance for d ≤ 3, everything else is simply absent. The
+  //     oracle unrolls the identical 3 rounds as CTEs (the q194/q214
+  //     idiom).
   private val q225 = Q(
     "q225_bfs_hops",
     "✦ graph: multi-source BFS hop-distance histogram (3 rounds, min-dist per round)",
@@ -1674,15 +1671,10 @@ object Relational extends Q.Module {
         .unionAll(pairs.select(col("y").as("src"), col("x").as("dst")))
         .persist()
       val nodes = adj.select(col("src").as("node")).distinct()
-      var dist = nodes.filter(col("node") % 7 === 0)
-        .select(col("node"), lit(0L).as("d")).localCheckpoint(true)
-      for (_ <- 1 to 3) {
-        val next = dist.join(adj, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("d") + 1).as("d"))
-        dist = dist.select(col("node"), col("d")).unionByName(next)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-      }
+      val dist = graft.operators.MinPlus.relax(
+        nodes.filter(col("node") % 7 === 0)
+          .select(col("node"), lit(0L).as("d")),
+        adj.withColumn("w", lit(1L)), rounds = 3)
       val totals = nodes.agg(count(lit(1)).as("n_graph"))
       dist.groupBy(col("d")).agg(count(lit(1)).as("n_nodes"))
         .crossJoin(broadcast(totals))
@@ -1712,14 +1704,10 @@ object Relational extends Q.Module {
   //     companion of q225's hop-count BFS: edge length shrinks with tie
   //     strength (w = max(1, 8 − #shared co-purchase blocks), exact
   //     integers), so the distance ranks "how socially close to the seed
-  //     cohort" rather than "how many hops". Per round: ONE
-  //     frontier⋈edges equi-join relaxation (d + w) + ONE min-distance
-  //     aggregate (map-combined), eager localCheckpoint per generation —
-  //     the CC/PageRank/BFS lineage rule. Bounded rounds make the
-  //     result well-defined without a fixpoint: d is the true shortest
-  //     distance among ≤3-edge paths (min-plus semiring power A³ over
-  //     the seed vector). The oracle unrolls the identical 3 relaxation
-  //     rounds as CTEs.
+  //     cohort" rather than "how many hops". The rounds are
+  //     MinPlus.relax: d is the true shortest distance among ≤3-edge
+  //     paths. The oracle unrolls the identical 3 relaxation rounds as
+  //     CTEs.
   private val q243 = Q(
     "q243_weighted_sssp",
     "✦ graph: multi-source weighted shortest distance (3 Bellman-Ford rounds, integer weights)",
@@ -1751,15 +1739,10 @@ object Relational extends Q.Module {
           col("w")))
         .persist()
       val nodes = adj.select(col("src").as("node")).distinct()
-      var dist = nodes.filter(col("node") % 7 === 0)
-        .select(col("node"), lit(0L).as("d")).localCheckpoint(true)
-      for (_ <- 1 to 3) {
-        val next = dist.join(adj, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        dist = dist.select(col("node"), col("d")).unionByName(next)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-      }
+      val dist = graft.operators.MinPlus.relax(
+        nodes.filter(col("node") % 7 === 0)
+          .select(col("node"), lit(0L).as("d")),
+        adj, rounds = 3)
       val totals = nodes.agg(count(lit(1)).as("n_graph"))
       dist.groupBy(col("d")).agg(count(lit(1)).as("n_nodes"))
         .crossJoin(broadcast(totals))

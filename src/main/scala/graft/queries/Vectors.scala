@@ -1090,7 +1090,8 @@ object Vectors extends Q.Module {
     // of the LIVE plan — its exchange stays visible to the planner, so
     // the loop's passes are exchange-free (a localCheckpoint would
     // erase the partitioning: its LogicalRDD reports
-    // UnknownPartitioning under AQE — measured in the r19 q317 dump).
+    // UnknownPartitioning under AQE — measured in the r19 q317 dump,
+    // pinned by PlanEvidenceSpec).
     // `ve`, the MEMOIZED handle, is the localCheckpoint of that cache:
     // Memo outlives the harness's per-query clearCache, which would
     // empty a CacheManager persist and silently recompute (the r14
@@ -1132,11 +1133,11 @@ object Vectors extends Q.Module {
       val next = update(assign(cent)).localCheckpoint(true)
       // The incoming centroids (c0, c1) are dead once `next` is
       // materialized.
-      graft.operators.Memo.release(cent)
+      graft.operators.Gen.release(cent)
       cent = next
     }
     val asg = assign(cent).localCheckpoint(true)
-    graft.operators.Memo.release(cent)
+    graft.operators.Gen.release(cent)
     cent = update(asg).localCheckpoint(true)
     // The loop is done: the memoized triple survives on its own
     // checkpoints; the live-plan cache can go (the harness clearCache
@@ -1626,9 +1627,12 @@ object Vectors extends Q.Module {
       // whole extra job's scheduling latency per round. cent keeps its
       // eager cut: it is the BROADCAST side of the next round's assign,
       // and a lazy broadcast subtree re-executes the entire chain
-      // (PageRank scaladoc has the same rule).
+      // (PageRank scaladoc has the same rule). The incoming centroids
+      // are dead once their successor is materialized.
       for (_ <- 1 to 3) {
-        cent = update(assign(cent)).localCheckpoint(true)
+        val next = update(assign(cent)).localCheckpoint(true)
+        graft.operators.Gen.release(cent)
+        cent = next
       }
       // Encode the corpus against the TRAINED codebook (iteration 3's),
       // the same pass a production encoder ships.

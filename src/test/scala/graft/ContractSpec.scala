@@ -62,10 +62,9 @@ class ContractSpec extends SparkSuite {
     assert(md.contains(s"$suites suites"), s"README suite count drifted from $suites")
   }
 
-  // The session builder and the SPARK_GRAFT_* env reads once had a
-  // hand-copy per main, and the copies drifted (the tests lacked
-  // spark.rdd.compress, Verify ignored SPARK_GRAFT_SHUFFLE_PARTITIONS).
-  test("one session builder and one place reading SPARK_GRAFT_* env") {
+  // (file name, line) for every line of src/main/scala that is not a
+  // comment line
+  private lazy val mainCode: List[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val files = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
@@ -74,13 +73,19 @@ class ContractSpec extends SparkSuite {
     }
     def isComment(l: String): Boolean =
       Seq("//", "*", "/*").exists(l.trim.startsWith)
-    // (file name, line) for every line that is not a comment line
-    val code = files.flatMap { f =>
+    files.flatMap { f =>
       java.nio.file.Files.readAllLines(f).asScala.filterNot(isComment)
         .map(f.getFileName.toString -> _)
     }
-    def filesWith(needle: String): Set[String] =
-      code.collect { case (f, l) if l.contains(needle) => f }.toSet
+  }
+
+  private def filesWith(needle: String): Set[String] =
+    mainCode.collect { case (f, l) if l.contains(needle) => f }.toSet
+
+  // The session builder and the SPARK_GRAFT_* env reads once had a
+  // hand-copy per main, and the copies drifted (the tests lacked
+  // spark.rdd.compress, Verify ignored SPARK_GRAFT_SHUFFLE_PARTITIONS).
+  test("one session builder and one place reading SPARK_GRAFT_* env") {
     assert(filesWith("SparkSession.builder()") == Set("Session.scala"))
     assert(filesWith("\"SPARK_GRAFT_").subsetOf(
       Set("Session.scala", "Bench.scala")),
@@ -88,6 +93,16 @@ class ContractSpec extends SparkSuite {
     val conf = spark.sparkContext.getConf
     assert(conf.get("spark.rdd.compress", "false") == "true")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  // Generations were once cut two ways: a persist of `df.rdd` as external
+  // Rows (which keeps the RDD lineage and every shuffle file behind it)
+  // and a local checkpoint, released through two doors. One mechanism
+  // remains: local checkpoints, released through Gen.release.
+  test("one generation mechanism: no rdd persist, one release door") {
+    Seq(".rdd.persist(", "releaseLocalCheckpoint", "Memo.release").foreach { n =>
+      assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
+    }
   }
 
   test("oracle SQL mentions only fixture tables") {

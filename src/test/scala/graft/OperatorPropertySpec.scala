@@ -142,8 +142,10 @@ class OperatorPropertySpec extends SparkSuite {
   // frees nothing without GC). After a run + materialization, the only
   // persisted RDDs left beyond the caller's own must be the FINAL
   // generation (the result scans it) plus at most one in-flight async
-  // unpersist. A 200-node path forces several star rounds, so a
-  // reintroduced leak shows up as one extra persisted RDD per round.
+  // unpersist — or, for PageRank, the degree checkpoint. A 200-node path
+  // forces several star rounds, so a reintroduced leak shows up as one
+  // extra persisted RDD per round; PageRank's 10 iterations and the
+  // 3-round relaxation leak one per iteration the same way.
   test("CC and KCore release superseded generations") {
     import spark.implicits._
     val sc = spark.sparkContext
@@ -175,6 +177,20 @@ class OperatorPropertySpec extends SparkSuite {
     }
     assert(kcExtra <= 2,
       s"KCore left $kcExtra persisted RDDs (final generation + <=1 in-flight allowed)")
+    val prExtra = extraAfter {
+      val ring = (0L until 50L).flatMap(i => Seq((i, (i + 1) % 50), ((i + 1) % 50, i)))
+        .toDF("src", "dst")
+      assert(graft.operators.PageRank.run(ring).count() == 50)
+    }
+    assert(prExtra <= 2,
+      s"PageRank left $prExtra persisted RDDs (final generation + degree allowed)")
+    val mpExtra = extraAfter {
+      val adj = path.select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
+      val seeds = Seq((0L, 0L)).toDF("node", "d")
+      assert(graft.operators.MinPlus.relax(seeds, adj, rounds = 3).count() == 4)
+    }
+    assert(mpExtra <= 2,
+      s"MinPlus left $mpExtra persisted RDDs (final generation + <=1 in-flight allowed)")
   }
 
   test("dot product HOF == local fold") {
@@ -973,8 +989,9 @@ class OperatorPropertySpec extends SparkSuite {
   }
 
   test("3-round min-plus relaxation == Dijkstra truncated at 3 edges (q243)") {
-    // random weighted graphs: the bounded Bellman-Ford rounds must equal
-    // the true shortest distance over paths of <= 3 edges.
+    // random weighted graphs: MinPlus.relax's bounded Bellman-Ford rounds
+    // (q225/q243) must equal the true shortest distance over paths of
+    // <= 3 edges.
     import spark.implicits._
     val rng = new Random(43)
     (1 to 3).foreach { _ =>
@@ -993,16 +1010,9 @@ class OperatorPropertySpec extends SparkSuite {
         want = (want.toSeq ++ relaxed).groupBy(_._1)
           .map { case (k, vs) => k -> vs.map(_._2).min }
       }
-      val adjDf = adj.toDF("src", "dst", "w")
-      var dist = seeds.map(x => (x, 0L)).toDF("node", "d")
-        .localCheckpoint(true)
-      for (_ <- 1 to 3) {
-        val next = dist.join(adjDf, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        dist = dist.select(col("node"), col("d")).unionByName(next)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-      }
+      val dist = graft.operators.MinPlus.relax(
+        seeds.map(x => (x, 0L)).toDF("node", "d"),
+        adj.toDF("src", "dst", "w"), rounds = 3)
       val got = dist.as[(Long, Long)].collect().toMap
       assert(got == want)
     }

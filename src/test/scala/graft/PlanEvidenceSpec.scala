@@ -501,4 +501,43 @@ class PlanEvidenceSpec extends SparkSuite {
       || plan.contains("BroadcastHashJoin"),
       s"no equi join found for candidate generation:\n$plan")
   }
+
+  // A local checkpoint keeps its input's hash partitioning only with AQE
+  // off. The sessions here run AQE, so the LogicalRDD leaf reports
+  // UnknownPartitioning(0) and a consumer keyed on the same column
+  // shuffles again. kmeansLloydBuild keeps a persist of the live plan
+  // next to its checkpoint for exactly this reason.
+  test("a local checkpoint keeps its hash partitioning only with AQE off") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.functions.{col, count, lit}
+    def checkpointed() = spark.range(200)
+      .select((col("id") % 10).as("k"), col("id"))
+      .repartition(col("k")).localCheckpoint(true)
+    def leaf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.outputPartitioning
+      }.get
+    def keyedConsumerPlan(df: org.apache.spark.sql.DataFrame): String = {
+      val agg = df.groupBy(col("k")).agg(count(lit(1)).as("n"))
+      assert(agg.collect().map(_.getLong(1)).sum == 200)
+      agg.queryExecution.executedPlan.toString
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val aqe = checkpointed()
+    assert(leaf(aqe) == UnknownPartitioning(0))
+    val aqePlan = keyedConsumerPlan(aqe)
+    assert(aqePlan.contains("Exchange hashpartitioning(k"),
+      s"expected the consumer to re-shuffle:\n$aqePlan")
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val plain = checkpointed()
+      assert(leaf(plain) match {
+        case HashPartitioning(Seq(k: Attribute), n) => k.name == "k" && n == 4
+        case _ => false
+      }, s"partitioning ${leaf(plain)}")
+      val plainPlan = keyedConsumerPlan(plain)
+      assert(!plainPlan.contains("Exchange"),
+        s"expected the consumer to reuse the partitioning:\n$plainPlan")
+    }
+  }
 }
