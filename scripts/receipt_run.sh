@@ -19,7 +19,15 @@ set -u
 cd "$(dirname "$0")/.."
 CLASSES=$1 SFDIR=$2 RUNS=$3 QFILE=$4 XMX=$5 SP=$6; shift 6
 FLOOR_GB=${RECEIPT_FLOOR_GB:-40}
-OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+# The JDK module opens Spark needs outside spark-submit: one copy, the
+# jdk17AddOpens block of build.sbt, read here as --add-opens flags.
+OPENS=$(sed -n '/^val jdk17AddOpens = Seq(/,/^)/p' build.sbt |
+  grep -o '"[^"$]*/[^"$]*"' | tr -d '"' | sed 's/.*/--add-opens &=ALL-UNNAMED/' |
+  paste -sd' ')
+if [ -z "$OPENS" ]; then
+  echo "=== REFUSED: no jdk17AddOpens block in build.sbt ==="
+  exit 2
+fi
 free_gb=$(df --output=avail -BG / | tail -1 | tr -dc 0-9)
 echo "=== $* @ $SFDIR runs=$RUNS sp=$SP free=${free_gb}G start $(date -u +%H:%M:%S) ==="
 if [ "$free_gb" -lt "$FLOOR_GB" ]; then

@@ -199,10 +199,13 @@ object Events extends Q.Module {
   // --- q89: merge_asof direction="forward" + tolerance (J5 variants):
   //     attribute each purchase to the EARLIEST view at-or-after it,
   //     per user, but only within 15 minutes. q39's union-tag pattern
-  //     mirrored: first(ignoreNulls) over a currentRow→unboundedFollowing
-  //     frame — still a single shuffle on user_id. The tolerance is a
+  //     mirrored: last(ignoreNulls) over the REVERSED order's running
+  //     frame (the first non-null at-or-after a row is the last non-null
+  //     up to it in reverse; Spark re-evaluates a currentRow→
+  //     unboundedFollowing frame per row, quadratic in partition size) —
+  //     still a single shuffle on user_id. The tolerance is a
   //     projection-level check on the matched view's timestamp; both
-  //     first() calls read the same frame in the same order, so view id
+  //     last() calls read the same frame in the same order, so view id
   //     and view time come from the same row.
   private val q89 = Q(
     "q89_asof_forward_tolerance",
@@ -219,15 +222,15 @@ object Events extends Q.Module {
         .select(col("user_id"), col("us"), lit(0).as("kind"),
           col("event_id"), lit(null).cast("long").as("view_id"),
           lit(null).cast("long").as("view_us"))
-      // At equal timestamps the purchase sorts before the view (kind 0<1),
-      // so `ts >=` semantics hold; among equal-ts views the EARLIEST
-      // event_id wins (first over ascending order).
+      // At equal timestamps the purchase sorts before the view (kind 0<1
+      // ascending), so `ts >=` semantics hold; among equal-ts views the
+      // EARLIEST event_id wins (last over descending order).
       val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("us"), col("kind"), col("event_id"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(col("us").desc, col("kind").desc, col("event_id").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       views.unionByName(purch)
-        .withColumn("next_view", first(col("view_id"), ignoreNulls = true).over(w))
-        .withColumn("next_view_us", first(col("view_us"), ignoreNulls = true).over(w))
+        .withColumn("next_view", last(col("view_id"), ignoreNulls = true).over(w))
+        .withColumn("next_view_us", last(col("view_us"), ignoreNulls = true).over(w))
         .filter(col("kind") === 0)
         .select(col("event_id").as("purchase_id"), col("user_id"),
           when(col("next_view_us") - col("us") <= tolUs, col("next_view"))
@@ -318,14 +321,16 @@ object Events extends Q.Module {
       val wb = Window.partitionBy(col("user_id"))
         .orderBy(col("us"), col("kb"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      // Forward: the first view at-or-after, as the last one up to the
+      // row in the reversed order (q89's frame).
       val wf = Window.partitionBy(col("user_id"))
-        .orderBy(col("us"), col("kf"), col("event_id"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(col("us").desc, col("kf").desc, col("event_id").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       tagged
         .withColumn("back_view", last(col("view_id"), ignoreNulls = true).over(wb))
         .withColumn("back_us", last(col("view_us"), ignoreNulls = true).over(wb))
-        .withColumn("fwd_view", first(col("view_id"), ignoreNulls = true).over(wf))
-        .withColumn("fwd_us", first(col("view_us"), ignoreNulls = true).over(wf))
+        .withColumn("fwd_view", last(col("view_id"), ignoreNulls = true).over(wf))
+        .withColumn("fwd_us", last(col("view_us"), ignoreNulls = true).over(wf))
         .filter(col("kb") === 1) // keep purchases
         .select(col("event_id").as("purchase_id"), col("user_id"),
           when(col("back_view").isNotNull &&
@@ -716,8 +721,11 @@ object Events extends Q.Module {
   //     neighbors (pandas 'linear' semantics: interior gaps interpolate,
   //     trailing gaps carry the last known value, leading gaps stay
   //     NULL). Same grid idiom as q93; the neighbor lookup is four
-  //     ignore-nulls window expressions over two frames of ONE
-  //     per-event_type sort — no join, no self-merge. Determinism: the
+  //     ignore-nulls last() expressions over the running frames of the
+  //     ascending and the descending bucket order (the next known bucket
+  //     is the last known one in reverse: a currentRow→unboundedFollowing
+  //     frame is re-evaluated per row, quadratic in the grid) — ONE
+  //     per-event_type shuffle, no join, no self-merge. Determinism: the
   //     known bucket sums are decimal-exact (dsum) and the interpolation
   //     is a single identically-parenthesized double expression on both
   //     engines — `prev + (next - prev) * (Δfrom / Δspan)` with the
@@ -742,14 +750,14 @@ object Events extends Q.Module {
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("known"))
       val wPrev = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wNext = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      val wNext = Window.partitionBy(col("event_type")).orderBy(col("bucket").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       grid.join(agg, Seq("event_type", "bucket"), "left")
         .withColumn("prev_v", last(col("known"), ignoreNulls = true).over(wPrev))
         .withColumn("prev_b", last(when(col("known").isNotNull, col("bucket")),
           ignoreNulls = true).over(wPrev))
-        .withColumn("next_v", first(col("known"), ignoreNulls = true).over(wNext))
-        .withColumn("next_b", first(when(col("known").isNotNull, col("bucket")),
+        .withColumn("next_v", last(col("known"), ignoreNulls = true).over(wNext))
+        .withColumn("next_b", last(when(col("known").isNotNull, col("bucket")),
           ignoreNulls = true).over(wNext))
         .select(col("event_type"),
           timestamp_micros(col("bucket") * stepUs).cast("timestamp_ntz").as("ws"),
@@ -2832,8 +2840,8 @@ object Events extends Q.Module {
   //     estimates from the other direction). Shape: ONE corpus pass to
   //     per-user (first day, last day) — the only corpus-sized work —
   //     then tenure weeks, a collapsed week frame, and the at-risk
-  //     denominator as a REVERSED running sum (suffix sum over the
-  //     ≤ #weeks frame: at-risk(w) = Σ_{v ≥ w} churned(v), since every
+  //     denominator as a REVERSED running sum (a running sum over the
+  //     descending weeks: at-risk(w) = Σ_{v ≥ w} churned(v), since every
   //     user churns in exactly one tenure week — the conservation the
   //     spec asserts). Exact integers until the fpTrunc hazard.
   private val q329 = Q(
@@ -2847,8 +2855,8 @@ object Events extends Q.Module {
         .agg(min(col("dd")).as("first_dd"), max(col("dd")).as("last_dd"))
         .select(expr("(last_dd - first_dd) div 7").as("week"))
       val g = spans.groupBy(col("week")).agg(count(lit(1)).as("churned"))
-      val wSuf = Window.orderBy(col("week"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      val wSuf = Window.orderBy(col("week").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       g.withColumn("at_risk", sum(col("churned")).over(wSuf))
         .select(col("week"), col("churned"), col("at_risk"),
           fpTrunc(col("churned").cast("double")

@@ -105,6 +105,16 @@ class ContractSpec extends SparkSuite {
     }
   }
 
+  // Spark re-evaluates a currentRow→unboundedFollowing frame for every
+  // row, so its cost is quadratic in the partition (q158's interpolation
+  // grid was the worst case). The same values come from the reversed order's
+  // running frame: first(x, ignoreNulls) becomes last(x, ignoreNulls),
+  // a suffix sum a running sum.
+  test("no currentRow→unboundedFollowing window frame") {
+    val n = "Window.currentRow, Window.unboundedFollowing"
+    assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
+  }
+
   test("oracle SQL mentions only fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.{GatherExec, SmallSort}
 
-/** Pins the [[SmallSort]] planner strategy: a small global sort is
-  * gathered into one partition instead of range-partitioned (one job
-  * fewer, same rows), the decision follows AQE's runtime statistics, the
-  * broadcast threshold bounds it, and plans whose input is already in
-  * one partition, or whose sort sits under a limit, are unchanged.
+/** Pins the [[SmallSort]] planner strategy: a small global sort runs in
+  * one partition instead of being range-partitioned (one job fewer, same
+  * rows); it coalesces in place once its inputs are known small, and
+  * gathers through an exchange until then; the decision follows AQE's
+  * runtime statistics, the broadcast threshold bounds it, and plans whose
+  * input is already in one partition, or whose sort sits under a limit,
+  * are unchanged.
   */
 class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
@@ -37,8 +39,20 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def nodes(df: DataFrame): Seq[SparkPlan] =
     collect(df.queryExecution.executedPlan) { case p => p }
 
-  private def gathers(df: DataFrame): Int =
-    nodes(df).count(_.isInstanceOf[GatherExec])
+  /** The node under each global sort of the final plan, past the
+    * codegen boundary a sort's input sits behind. */
+  private def sortInputs(df: DataFrame): Seq[SparkPlan] =
+    nodes(df).collect { case s: SortExec if s.global => s.child }.map {
+      case InputAdapter(child) => child
+      case child => child
+    }
+
+  private def gathered(p: SparkPlan): Boolean = p.isInstanceOf[GatherExec]
+
+  private def coalesced(p: SparkPlan): Boolean = p match {
+    case CoalesceExec(1, _) => true
+    case _ => false
+  }
 
   private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
     nodes(df).collect { case e: ShuffleExchangeExec => e }
@@ -46,15 +60,22 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def ranged(df: DataFrame): Boolean =
     exchanges(df).exists(_.outputPartitioning.isInstanceOf[RangePartitioning])
 
+  private def singleExchanges(df: DataFrame): Int =
+    exchanges(df).count(_.outputPartitioning == SinglePartition)
+
+  private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
   test("(a) q02 and q25 gather instead of range-partitioning, with the same rows") {
-    for (name <- Seq("q02_project_derive", "q25_agg_value_counts")) {
+    // q02 is a narrow chain over a scan: no exchange at all. q25 keeps
+    // the one hash exchange of its aggregate and coalesces its output.
+    for ((name, hashes) <- Seq("q02_project_derive" -> 0, "q25_agg_value_counts" -> 1)) {
       val df = query(name)
       val rows = df.collect().toSeq
-      assert(gathers(df) == 1 && !ranged(df),
-        s"$name:\n${df.queryExecution.executedPlan}")
+      assert(sortInputs(df).map(coalesced) == Seq(true) && !ranged(df) &&
+        singleExchanges(df) == 0 && exchanges(df).size == hashes, s"$name:\n${plan(df)}")
       val ref = query(name)
       val refRows = withoutSmallSort(ref.collect().toSeq)
-      assert(ranged(ref), s"$name reference:\n${ref.queryExecution.executedPlan}")
+      assert(ranged(ref), s"$name reference:\n${plan(ref)}")
       assert(rows.nonEmpty && rows == refRows, s"$name rows differ")
     }
   }
@@ -64,7 +85,10 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       df.write.format("noop").mode("overwrite").save()
     val df = query("q02_project_derive")
     write(df) // the first write also infers the schema and warms codegen
-    assert(jobsDuring(write(df)) == 2)
+    // One job: the scan, the coalesce and the sort run in one stage.
+    // Without it: the range-sampling job, then one job per side of the
+    // range exchange.
+    assert(jobsDuring(write(df)) == 1)
     assert(withoutSmallSort(jobsDuring(write(df))) == 3)
   }
 
@@ -82,8 +106,8 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(initial.contains("rangepartitioning") && !initial.contains("Gather"),
         s"initial plan:\n$initial")
       val rows = fresh.collect().toSeq
-      assert(gathers(fresh) == 1 && !ranged(fresh),
-        s"final plan:\n${fresh.queryExecution.executedPlan}")
+      assert(sortInputs(fresh).map(coalesced) == Seq(true) && !ranged(fresh) &&
+        singleExchanges(fresh) == 0, s"final plan:\n${plan(fresh)}")
       assert(rows == withoutSmallSort(query("q13_join_range").collect().toSeq))
     }
   }
@@ -92,8 +116,8 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     for (t <- Seq("1", "-1")) withConf(threshold, t) {
       val df = query("q02_project_derive")
       df.collect()
-      assert(gathers(df) == 0 && ranged(df),
-        s"$threshold=$t:\n${df.queryExecution.executedPlan}")
+      assert(!sortInputs(df).exists(p => gathered(p) || coalesced(p)) && ranged(df),
+        s"$threshold=$t:\n${plan(df)}")
     }
   }
 
@@ -109,10 +133,10 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       val rows = df.collect().toSeq
       val ref = build()
       val refRows = withoutSmallSort(ref.collect().toSeq)
-      assert(gathers(df) == 1, s"$label:\n${df.queryExecution.executedPlan}")
+      assert(sortInputs(df).map(p => gathered(p) || coalesced(p)) == Seq(true),
+        s"$label:\n${plan(df)}")
       assert(exchanges(df).size == exchanges(ref).size,
-        s"$label:\n${df.queryExecution.executedPlan}\nvs\n" +
-          ref.queryExecution.executedPlan)
+        s"$label:\n${plan(df)}\nvs\n${plan(ref)}")
       if (label == "window") assert(rows == refRows)
     }
   }
@@ -122,7 +146,31 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val df = Tables.orders(spark, sfDir)
       .orderBy(col("o_totalprice"), col("o_orderkey")).limit(10)
     assert(df.collect().length == 10)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject") && !plan.contains("Gather"), plan)
+    val shape = plan(df)
+    assert(shape.contains("TakeOrderedAndProject") && !shape.contains("Gather") &&
+      !shape.contains("Coalesce"), shape)
+  }
+
+  test("(g) q25's initial plan gathers; it coalesces once its stage has run") {
+    val df = query("q25_agg_value_counts")
+    val initial = plan(df) // before any action: AQE's initial plan
+    assert(initial.contains("Gather") && initial.contains("Exchange SinglePartition") &&
+      !initial.contains("Coalesce"), s"initial plan:\n$initial")
+    df.collect()
+    assert(plan(df).contains("Coalesce 1") && sortInputs(df).map(coalesced) == Seq(true) &&
+      exchanges(df).size == 1, s"final plan:\n${plan(df)}")
+  }
+
+  test("(h) without AQE, q25 gathers and q02 coalesces, with the same rows") {
+    val cases = Seq[(String, SparkPlan => Boolean)](
+      "q02_project_derive" -> coalesced, "q25_agg_value_counts" -> gathered)
+    val adaptive = cases.map { case (name, _) => query(name).collect().toSeq }
+    withConf("spark.sql.adaptive.enabled", "false") {
+      for (((name, onePartition), rows) <- cases.zip(adaptive)) {
+        val df = query(name)
+        assert(df.collect().toSeq == rows, s"$name rows differ")
+        assert(sortInputs(df).map(onePartition) == Seq(true), s"$name:\n${plan(df)}")
+      }
+    }
   }
 }
