@@ -87,6 +87,11 @@ object Tables {
     * so the file listing is not repeated. On any input whose scan already
     * yields >= half the cores the helper is the identity and the plan
     * stays Exchange-free (pinned by PlanEvidenceSpec).
+    *
+    * Fan out the corpus-sized frame, never a constant slice of it.
+    * Catalyst pushes a filter on a fanned frame under its round-robin
+    * exchange, so each slice (`doc_id < 20`) starts its own job that
+    * scans and shuffles the table again. Slices read the plain scan.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

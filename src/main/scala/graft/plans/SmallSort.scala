@@ -3,13 +3,16 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, PythonUDAF, SortOrder}
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, LogicalQueryStage, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.aggregate.AggUtils
 import org.apache.spark.sql.internal.SQLConf
 
-/** Planner strategy: sort a small global `orderBy` in one partition.
+/** Planner strategy: sort a small global `orderBy`, and run a small
+  * global aggregate, in one partition.
   *
   * Spark plans every global sort as `Exchange rangepartitioning(order,
   * shuffle.partitions)`, and `RangePartitioner` first runs a sampling job
@@ -61,12 +64,37 @@ import org.apache.spark.sql.internal.SQLConf
   * top-down, and `SpecialLimits` plans the limit and its sort together
   * as `TakeOrderedAndProject`.
   *
+  * Global aggregates (no grouping key, no distinct) take the coalesce
+  * path on the same gate: `partial <- CoalesceExec(1, child)` under the
+  * final aggregate, like a Dask tree reduction with one level. The
+  * partial aggregate then reports `SinglePartition`, so the final
+  * aggregate's `AllTuples` needs no `Exchange SinglePartition` and no
+  * stage. It shares the gate for the same two reasons: the one task also
+  * runs the narrow work under the coalesce, and AQE would never undo a
+  * coalesce picked on a static estimate, so q289's initial plan keeps
+  * its exchange and the re-plan drops it once the stage below has run.
+  * There is no gather path: Spark's own plan already moves only one
+  * partial row per partition. Keyed aggregates and windows keep their
+  * exchanges (under an `explode` a coalesce would put the per-row work
+  * on one task), and a distinct aggregate keeps Spark's plan.
+  *
+  * Streaming plans are never taken. Spark 4.1's streaming planner runs
+  * its stateful strategies ahead of the session's, so a streaming
+  * aggregate does not reach this one, but a complete-mode sort over it
+  * does; and under the opposite order a stateless plan of the aggregate
+  * would count each micro-batch on its own.
+  *
   * Install with [[register]] on a live session, or through
   * [[GraftExtensions]] (`injectPlannerStrategy`); both bind this object.
   */
 object SmallSort extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case _ if plan.isStreaming => Nil
+    case PhysicalAggregation(grouping, aggs, result, child) if grouping.isEmpty &&
+        aggs.forall(a => !a.isDistinct && !a.aggregateFunction.isInstanceOf[PythonUDAF]) &&
+        small(child) && inputsKnownSmall(child) =>
+      AggUtils.planAggregateWithoutDistinct(Nil, aggs, result, CoalesceExec(1, planLater(child)))
     case Sort(order, true, child, _) if small(child) =>
       val input = planLater(child)
       val one = if (inputsKnownSmall(child)) CoalesceExec(1, input) else GatherExec(input)

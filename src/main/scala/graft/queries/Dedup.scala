@@ -774,7 +774,8 @@ object Dedup extends Q.Module {
       val base = Tables.fanOut(Tables.documents(s, d))
         .select(col("doc_id"), col("text"))
       val ws = split(col("text"), " ")
-      val mutated = base.filter(col("doc_id") < 20)
+      // The eval slice reads the plain scan (see Tables.fanOut).
+      val mutated = Tables.documents(s, d).filter(col("doc_id") < 20)
         .select((col("doc_id") + 10000).as("doc_id"),
           concat_ws(" ", transform(ws,
             (x, i) => when(i === 5, lit("xqzv")).otherwise(x))).as("text"))

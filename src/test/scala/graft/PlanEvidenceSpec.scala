@@ -13,6 +13,38 @@ class PlanEvidenceSpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  // Tables.fanOut: a filter on a fanned frame is pushed under its
+  // round-robin exchange, so a constant slice read from it scans and
+  // shuffles the corpus once more. The slices read the plain scan. The
+  // exchanges of a cached plan (q112's signatures) count once.
+  test("q97/q112/q173 slices read the plain scan: at most one round-robin each") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    object aqe extends AdaptiveSparkPlanHelper
+    def plans(p: SparkPlan): Seq[SparkPlan] =
+      p +: aqe.collect(p) { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+        .distinct.flatMap(plans)
+    for (name <- Seq("q97_decontamination", "q112_decontam_fuzzy", "q173_feature_hashing")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      val all = plans(df.queryExecution.executedPlan)
+      val spreads = all.flatMap(aqe.collect(_) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      })
+      assert(spreads.size <= 1, s"$name:\n${all.mkString("\n")}")
+      if (name == "q97_decontamination") {
+        val builds = all.flatMap(aqe.collect(_) { case b: BroadcastExchangeExec => b })
+        assert(builds.size == 1 &&
+          builds.forall(aqe.collect(_) { case a: HashAggregateExec => a }.isEmpty),
+          s"$name:\n${all.mkString("\n")}")
+      }
+    }
+  }
+
   test("q03 compound filter pushes down to the parquet scan") {
     val plan = planOf("q03_filter_compound")
     val pushed = "PushedFilters: \\[([^\\]]*)\\]".r

@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +19,8 @@ import graft.plans.{GatherExec, SmallSort}
   * gathers through an exchange until then; the decision follows AQE's
   * runtime statistics, the broadcast threshold bounds it, and plans whose
   * input is already in one partition, or whose sort sits under a limit,
-  * are unchanged.
+  * are unchanged. A small global aggregate coalesces in place on the same
+  * gate, and keeps Spark's plan otherwise.
   */
 class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
@@ -65,7 +68,21 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
-  test("(a) q02 and q25 gather instead of range-partitioning, with the same rows") {
+  private def write(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The node under each partial aggregate of a global aggregate in the
+    * final plan, past the codegen boundary. */
+  private def partialAggInputs(df: DataFrame): Seq[SparkPlan] =
+    nodes(df).collect {
+      case a: BaseAggregateExec if a.groupingExpressions.isEmpty &&
+        a.aggregateExpressions.forall(_.mode == Partial) => a.child
+    }.map {
+      case InputAdapter(child) => child
+      case child => child
+    }
+
+  test("(a) q02 and q25 coalesce instead of range-partitioning, with the same rows") {
     // q02 is a narrow chain over a scan: no exchange at all. q25 keeps
     // the one hash exchange of its aggregate and coalesces its output.
     for ((name, hashes) <- Seq("q02_project_derive" -> 0, "q25_agg_value_counts" -> 1)) {
@@ -80,9 +97,7 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("(b) q02's noop write runs 2 jobs, not 3: no range-sampling job") {
-    def write(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+  test("(b) q02's noop write runs 1 job, not 3: no range-sampling job") {
     val df = query("q02_project_derive")
     write(df) // the first write also infers the schema and warms codegen
     // One job: the scan, the coalesce and the sort run in one stage.
@@ -92,7 +107,7 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(withoutSmallSort(jobsDuring(write(df))) == 3)
   }
 
-  test("(c) q13 gathers on runtime statistics above a static estimate") {
+  test("(c) q13 coalesces on runtime statistics above a static estimate") {
     val df = query("q13_join_range")
     val static = df.queryExecution.optimizedPlan
       .collectFirst { case s: Sort => s.child.stats.sizeInBytes }.get
@@ -170,6 +185,70 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         val df = query(name)
         assert(df.collect().toSeq == rows, s"$name rows differ")
         assert(sortInputs(df).map(onePartition) == Seq(true), s"$name:\n${plan(df)}")
+      }
+    }
+  }
+
+  test("(i) q289's global aggregate coalesces once its stage has run") {
+    val df = query("q289_vocab_richness")
+    // AQE's initial plan: the aggregate over the shingle aggregate has
+    // no materialized stage under it yet, so it keeps Spark's exchange.
+    val initial = plan(df)
+    assert(initial.contains("Exchange SinglePartition") && !initial.contains("Coalesce"),
+      s"initial plan:\n$initial")
+    val rows = df.collect().toSeq
+    val parts = exchanges(df).map(_.outputPartitioning)
+    assert(partialAggInputs(df).map(coalesced) == Seq(true) && singleExchanges(df) == 0 &&
+      parts.count(_.isInstanceOf[HashPartitioning]) == 1 &&
+      parts.count(_.isInstanceOf[RoundRobinPartitioning]) == 1 && parts.size == 2,
+      s"final plan:\n${plan(df)}")
+    val ref = query("q289_vocab_richness")
+    assert(rows.size == 1 && rows == withoutSmallSort(ref.collect().toSeq))
+    assert(singleExchanges(ref) == 1, s"reference:\n${plan(ref)}")
+  }
+
+  test("(j) q289's noop write runs 3 jobs, 4 without the strategy") {
+    val df = query("q289_vocab_richness")
+    write(df) // the first write also infers the schema and warms codegen
+    // One job per stage: the round-robin fan-out, the shingle
+    // aggregate, then the global aggregate in the coalesced last stage.
+    assert(jobsDuring(write(df)) == 3)
+    assert(withoutSmallSort(jobsDuring(write(df))) == 4)
+  }
+
+  test("(k) a distinct global aggregate keeps Spark's plan") {
+    SmallSort.register(spark)
+    val build = () => Tables.orders(spark, sfDir).agg(countDistinct(col("o_custkey")).as("n"))
+    val df = build()
+    val rows = df.collect().toSeq
+    val ref = build()
+    val refRows = withoutSmallSort(ref.collect().toSeq)
+    def shape(d: DataFrame) = nodes(d).map(_.nodeName)
+    assert(shape(df) == shape(ref) && singleExchanges(df) == 1,
+      s"${plan(df)}\nvs\n${plan(ref)}")
+    assert(rows == refRows)
+  }
+
+  test("(l) a global aggregate over no rows returns one row, as without the strategy") {
+    SmallSort.register(spark)
+    val build = () => Tables.orders(spark, sfDir).filter(lit(false))
+      .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("s"))
+    val df = build()
+    val rows = df.collect().toSeq
+    assert(plan(df).contains("Coalesce 1"), plan(df))
+    val ref = build()
+    for (got <- Seq(rows, withoutSmallSort(ref.collect().toSeq))) {
+      assert(got.size == 1 && got.head.getLong(0) == 0L && got.head.isNullAt(1), got)
+    }
+  }
+
+  test("(m) a threshold of -1, or AQE off, keeps q289's single-partition exchange") {
+    for ((key, value) <- Seq(threshold -> "-1", "spark.sql.adaptive.enabled" -> "false")) {
+      withConf(key, value) {
+        val df = query("q289_vocab_richness")
+        df.collect()
+        assert(partialAggInputs(df).forall(!coalesced(_)) && singleExchanges(df) == 1,
+          s"$key=$value:\n${plan(df)}")
       }
     }
   }

@@ -286,4 +286,47 @@ class StreamingSpec extends SparkSuite {
       "file_stream", OutputMode.Complete)
     assert(spark.table("file_stream").count() > 0)
   }
+
+  // The streaming planner puts its stateful strategies ahead of the
+  // session's, so SmallSort never sees a streaming aggregate; it does see
+  // the sort over one, and leaves it (and every streaming plan) to Spark.
+  // The file source's batch leaf reports a real, small size, as
+  // fromEventsDir's does, so the size gate alone would take the sort.
+  test("complete-mode counts over a file stream keep running totals and Spark's plan") {
+    import spark.implicits._
+    graft.plans.SmallSort.register(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft_count_").toString
+    def writeBatch(ids: Range): Unit =
+      ids.map(i => Ev(i.toLong, ts(i), if (i % 2 == 0) "view" else "click", i.toDouble))
+        .toDF().coalesce(1).write.mode("append").parquet(s"$root/src")
+    writeBatch(0 until 30)
+    val stream = spark.readStream.schema(spark.read.parquet(s"$root/src").schema)
+      .parquet(s"$root/src")
+    def start(df: org.apache.spark.sql.DataFrame, name: String) =
+      df.writeStream.format("memory").queryName(name).outputMode(OutputMode.Complete).start()
+    val global = start(stream.agg(count(lit(1)).as("n")), "global_count")
+    val sorted = start(stream.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+      .orderBy(col("event_type")), "sorted_count")
+    def totals(): (Seq[Long], Seq[(String, Long)]) = {
+      global.processAllAvailable(); sorted.processAllAvailable()
+      (spark.table("global_count").as[Long].collect().toSeq,
+        spark.table("sorted_count").as[(String, Long)].collect().toSeq)
+    }
+    try {
+      assert(totals() == (Seq(30L), Seq("click" -> 15L, "view" -> 15L)))
+      writeBatch(30 until 50)
+      assert(totals() == (Seq(50L), Seq("click" -> 25L, "view" -> 25L)))
+      for (q <- Seq(global, sorted)) {
+        val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+          .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+        assert(!plan.contains("Gather") && !plan.contains("Coalesce"), plan)
+      }
+    } finally {
+      global.stop(); sorted.stop()
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(new java.io.File(root))
+    }
+  }
 }
