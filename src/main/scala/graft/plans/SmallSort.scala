@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, PythonUDAF, SortOrder}
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, LogicalQueryStage, Project, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, LogicalQueryStage, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.aggregate.AggUtils
@@ -64,25 +64,34 @@ import org.apache.spark.sql.internal.SQLConf
   * top-down, and `SpecialLimits` plans the limit and its sort together
   * as `TakeOrderedAndProject`.
   *
-  * Global aggregates (no grouping key, no distinct) take the coalesce
-  * path on the same gate: `partial <- CoalesceExec(1, child)` under the
-  * final aggregate, like a Dask tree reduction with one level. The
-  * partial aggregate then reports `SinglePartition`, so the final
-  * aggregate's `AllTuples` needs no `Exchange SinglePartition` and no
-  * stage. It shares the gate for the same two reasons: the one task also
-  * runs the narrow work under the coalesce, and AQE would never undo a
-  * coalesce picked on a static estimate, so q289's initial plan keeps
-  * its exchange and the re-plan drops it once the stage below has run.
+  * A global aggregate (no grouping key, no distinct) takes the coalesce
+  * path only when its input is a finished AQE stage that holds a keyed
+  * aggregate's output, within the threshold (q289's frequency-of-
+  * frequency pass over its shingle counts): `partial <- CoalesceExec(1,
+  * stage)` under the final aggregate, a Dask tree reduction with one
+  * level. The partial aggregate then reports `SinglePartition`, so the
+  * final aggregate's `AllTuples` needs no `Exchange SinglePartition` and
+  * no stage. The gate is narrower than the sort path's because the one
+  * task runs the partial aggregate's expressions and everything narrow
+  * below it, and a few bytes of input can still be a lot of work: over a
+  * round-robin fan-out it would undo the spread that `Tables.fanOut`
+  * exists for (q321 tokenizes every document in its sums); over a lazy
+  * local checkpoint it would run the checkpoint's last build stage in
+  * one task (the edge fingerprint of `ConnectedComponents`, the edge
+  * count of `PageRank`); and one task would read a whole persisted
+  * frame (q282's md5 projection).
+  * A keyed aggregate's rows are already reduced. The stage must have
+  * run because AQE never undoes a coalesce picked on a static estimate,
+  * so q289's initial plan keeps its exchange and the re-plan drops it.
   * There is no gather path: Spark's own plan already moves only one
   * partial row per partition. Keyed aggregates and windows keep their
-  * exchanges (under an `explode` a coalesce would put the per-row work
-  * on one task), and a distinct aggregate keeps Spark's plan.
+  * exchanges, and a distinct aggregate keeps Spark's plan.
   *
-  * Streaming plans are never taken. Spark 4.1's streaming planner runs
-  * its stateful strategies ahead of the session's, so a streaming
-  * aggregate does not reach this one, but a complete-mode sort over it
-  * does; and under the opposite order a stateless plan of the aggregate
-  * would count each micro-batch on its own.
+  * Streaming aggregates are never taken (AQE does not run in a
+  * micro-batch, and Spark 4.1's streaming planner plans them with its
+  * stateful strategies first); under the opposite order a stateless plan
+  * would count each micro-batch on its own. A complete-mode sort over a
+  * streaming aggregate keeps the sort path.
   *
   * Install with [[register]] on a live session, or through
   * [[GraftExtensions]] (`injectPlannerStrategy`); both bind this object.
@@ -90,10 +99,10 @@ import org.apache.spark.sql.internal.SQLConf
 object SmallSort extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case _ if plan.isStreaming => Nil
-    case PhysicalAggregation(grouping, aggs, result, child) if grouping.isEmpty &&
+    case PhysicalAggregation(grouping, aggs, result, child) if !plan.isStreaming &&
+        grouping.isEmpty &&
         aggs.forall(a => !a.isDistinct && !a.aggregateFunction.isInstanceOf[PythonUDAF]) &&
-        small(child) && inputsKnownSmall(child) =>
+        reducedStage(child) =>
       AggUtils.planAggregateWithoutDistinct(Nil, aggs, result, CoalesceExec(1, planLater(child)))
     case Sort(order, true, child, _) if small(child) =>
       val input = planLater(child)
@@ -112,6 +121,13 @@ object SmallSort extends SparkStrategy {
 
   private def materialized(leaf: LogicalPlan): Boolean = leaf match {
     case stage: LogicalQueryStage => stage.isMaterialized
+    case _ => false
+  }
+
+  /** A small finished stage whose rows are a keyed aggregate's output. */
+  private def reducedStage(p: LogicalPlan): Boolean = p match {
+    case stage: LogicalQueryStage =>
+      stage.logicalPlan.isInstanceOf[Aggregate] && materialized(stage) && small(stage)
     case _ => false
   }
 

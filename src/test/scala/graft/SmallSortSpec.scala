@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Gen
 import graft.plans.{GatherExec, SmallSort}
 
 /** Pins the [[SmallSort]] planner strategy: a small global sort runs in
@@ -19,8 +20,8 @@ import graft.plans.{GatherExec, SmallSort}
   * gathers through an exchange until then; the decision follows AQE's
   * runtime statistics, the broadcast threshold bounds it, and plans whose
   * input is already in one partition, or whose sort sits under a limit,
-  * are unchanged. A small global aggregate coalesces in place on the same
-  * gate, and keeps Spark's plan otherwise.
+  * are unchanged. A small global aggregate over a finished keyed
+  * aggregate stage coalesces in place, and keeps Spark's plan otherwise.
   */
 class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
@@ -231,14 +232,21 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("(l) a global aggregate over no rows returns one row, as without the strategy") {
     SmallSort.register(spark)
-    val build = () => Tables.orders(spark, sfDir).filter(lit(false))
-      .agg(count(lit(1)).as("n"), sum(col("o_totalprice")).as("s"))
-    val df = build()
-    val rows = df.collect().toSeq
-    assert(plan(df).contains("Coalesce 1"), plan(df))
-    val ref = build()
-    for (got <- Seq(rows, withoutSmallSort(ref.collect().toSeq))) {
-      assert(got.size == 1 && got.head.getLong(0) == 0L && got.head.isNullAt(1), got)
+    // An empty keyed aggregate. AQE folds a finished empty stage into an
+    // empty relation, which keeps Spark's plan, so that rule is off here
+    // to run the coalesce over a stage with no rows.
+    val build = () => Tables.orders(spark, sfDir).filter(col("o_totalprice") < 0)
+      .groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("t"))
+      .agg(count(lit(1)).as("n"), sum(col("t")).as("s"))
+    withConf("spark.sql.adaptive.optimizer.excludedRules",
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation") {
+      val df = build()
+      val rows = df.collect().toSeq
+      assert(partialAggInputs(df).map(coalesced) == Seq(true), plan(df))
+      val ref = build()
+      for (got <- Seq(rows, withoutSmallSort(ref.collect().toSeq))) {
+        assert(got.size == 1 && got.head.getLong(0) == 0L && got.head.isNullAt(1), got)
+      }
     }
   }
 
@@ -250,6 +258,36 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         assert(partialAggInputs(df).forall(!coalesced(_)) && singleExchanges(df) == 1,
           s"$key=$value:\n${plan(df)}")
       }
+    }
+  }
+
+  test("(n) a global aggregate over a fan-out, a cache, a checkpoint or a scan keeps its exchange") {
+    // Each input is small in bytes, but the partial aggregate's per-row
+    // work (q321 tokenizes every document) or the cache or checkpoint
+    // build would run in the one coalesced task.
+    SmallSort.register(spark)
+    val orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice"))
+    val cached = orders.persist()
+    val checkpoint = orders.localCheckpoint(eager = false)
+    def total(df: DataFrame) =
+      df.agg(count(lit(1)).as("n"), bit_xor(xxhash64(col("o_orderkey"))).as("h"))
+    val cases = Seq[(String, () => DataFrame)](
+      "q321" -> (() => query("q321_packing_efficiency")),
+      "scan" -> (() => total(Tables.orders(spark, sfDir))),
+      "cache" -> (() => total(cached)),
+      "checkpoint" -> (() => total(checkpoint)))
+    try {
+      val coalescedPlans = cases.flatMap { case (label, build) =>
+        val df = build()
+        val rows = df.collect().toSeq
+        assert(rows.size == 1 && rows == withoutSmallSort(build().collect().toSeq), label)
+        if (partialAggInputs(df).forall(!coalesced(_)) && singleExchanges(df) == 1) None
+        else Some(s"$label:\n${plan(df)}")
+      }
+      assert(coalescedPlans.isEmpty, coalescedPlans.mkString("\n"))
+    } finally {
+      cached.unpersist(blocking = true)
+      Gen.release(checkpoint)
     }
   }
 }
