@@ -88,6 +88,13 @@ object Tables {
     * yields >= half the cores the helper is the identity and the plan
     * stays Exchange-free (pinned by PlanEvidenceSpec).
     *
+    * A small one-split scan plans as `Coalesce 1` over the scan
+    * ([[graft.plans.SmallSort]]), which reports one partition, so keyed
+    * work over an unfanned one-file frame runs in that one task with no
+    * exchange. The fan-out keeps its one round-robin exchange above the
+    * coalesce (its map side was already the scan's one task), and keyed
+    * work over the fanned frame still shuffles across the cores.
+    *
     * Fan out the corpus-sized frame, never a constant slice of it.
     * Catalyst pushes a filter on a fanned frame under its round-robin
     * exchange, so each slice (`doc_id < 20`) starts its own job that

@@ -4,15 +4,16 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, PythonUDAF, SortOrder}
-import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
+import org.apache.spark.sql.catalyst.planning.{PhysicalAggregation, ScanOperation}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, LogicalQueryStage, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.aggregate.AggUtils
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileSourceStrategy, HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.internal.SQLConf
 
-/** Planner strategy: sort a small global `orderBy`, and run a small
-  * global aggregate, in one partition.
+/** Planner strategy: sort a small global `orderBy`, run a small global
+  * aggregate, and read a small one-split file, in one partition.
   *
   * Spark plans every global sort as `Exchange rangepartitioning(order,
   * shuffle.partitions)`, and `RangePartitioner` first runs a sampling job
@@ -41,7 +42,11 @@ import org.apache.spark.sql.internal.SQLConf
   * knob, and a threshold of `-1` turns the strategy off with broadcasts.
   * The inputs are known small when every leaf under the sort is small
   * and is either a stage AQE has already run, whose size is its runtime
-  * size, or the scan at the end of a narrow `Project`/`Filter` chain.
+  * size, or the file scan (a `LogicalRelation`) at the end of a narrow
+  * `Project`/`Filter` chain. A persisted frame or a checkpoint is not a
+  * scan: the one task would also build the cache or the checkpoint.
+  * (Once AQE has built a cache in its own stage, the re-plan sees a
+  * finished stage and may coalesce over it.)
   *
   * Safe at scale because the decision is re-made on runtime statistics:
   * AQE re-plans the remaining logical plan through the session planner
@@ -85,7 +90,40 @@ import org.apache.spark.sql.internal.SQLConf
   * so q289's initial plan keeps its exchange and the re-plan drops it.
   * There is no gather path: Spark's own plan already moves only one
   * partial row per partition. Keyed aggregates and windows keep their
-  * exchanges, and a distinct aggregate keeps Spark's plan.
+  * exchanges unless their input is a one-split scan (below), and a
+  * distinct aggregate keeps Spark's plan.
+  *
+  * A small file scan that reads one split plans as `CoalesceExec(1,
+  * scan)` (every sf0.1 fixture table but lineitem: one parquet file, one
+  * row group). Spark's `FileSourceScanExec` reports
+  * `UnknownPartitioning(0)` even when it has one partition, so every
+  * keyed aggregate, window and equi-join over it gets a hash exchange,
+  * and every global aggregate or limit an `Exchange SinglePartition`:
+  * an extra stage, job and AQE re-plan that buys no parallelism, since
+  * its map side is the scan's one task and AQE folds its reduce side
+  * back into one partition at these sizes. It is the Dask frame read from
+  * one file, `npartitions=1`, whose `groupby().agg` runs as one task.
+  * The coalesce reports `SinglePartition`, which satisfies a
+  * `ClusteredDistribution`, `AllTuples` and an `OrderedDistribution`,
+  * so `EnsureRequirements` adds none of those exchanges; the work below
+  * each removed exchange already ran in that task. What the one task
+  * gives up (measured over the registry at sf0.1): an aggregate the plan
+  * uses several times is computed once per use, since there is no
+  * exchange left to reuse (q302); the two sides of a join run one after
+  * the other instead of as two concurrent map stages (q131); and work
+  * above a row-expanding join loses the post-shuffle tasks AQE gave it
+  * (q311's pair ranking). The gate cannot see these from the scan.
+  *
+  * The gate is the threshold above plus the file index's own listing:
+  * exactly one file, no longer than `FilePartition.maxSplitBytes` for
+  * that listing, so it is one split. The gate never asks the planned
+  * scan for its RDD (`inputRDD`): that builds the reader, with a
+  * broadcast of the Hadoop conf, on every plan and every AQE re-plan,
+  * and tripled a workload's planning time when tried. Files that are
+  * many, larger than a split, or above the threshold keep Spark's plan
+  * (lineitem at sf0.1, every sf1 table), and so do bucketed scans (they
+  * report their own hash partitioning) and streaming scans (a
+  * micro-batch's stateful operators need their own partitioning).
   *
   * Streaming aggregates are never taken (AQE does not run in a
   * micro-batch, and Spark 4.1's streaming planner plans them with its
@@ -108,6 +146,9 @@ object SmallSort extends SparkStrategy {
       val input = planLater(child)
       val one = if (inputsKnownSmall(child)) CoalesceExec(1, input) else GatherExec(input)
       SortExec(order, global = true, one) :: Nil
+    case ScanOperation(_, _, _, l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _))
+        if !l.isStreaming && fs.bucketSpec.isEmpty && small(l) && oneSplit(fs) =>
+      FileSourceStrategy(plan).map(CoalesceExec(1, _))
     case _ => Nil
   }
 
@@ -131,12 +172,24 @@ object SmallSort extends SparkStrategy {
     case _ => false
   }
 
-  /** A `Project`/`Filter` chain down to one leaf that is not a stage. */
+  /** A `Project`/`Filter` chain down to a file scan. */
   private def narrow(p: LogicalPlan): Boolean = p match {
     case Project(_, child) => narrow(child)
     case Filter(_, child) => narrow(child)
-    case _: LogicalQueryStage => false
-    case leaf => leaf.children.isEmpty
+    case _: LogicalRelation => true
+    case _ => false
+  }
+
+  /** The file index's listing, as it already holds it, is one file the
+    * scan reads as one split. */
+  private def oneSplit(fs: HadoopFsRelation): Boolean = fs.location match {
+    case index: PartitioningAwareFileIndex =>
+      val listing = index.listFiles(Nil, Nil)
+      listing.flatMap(_.files) match {
+        case Seq(file) => file.getLen <= FilePartition.maxSplitBytes(fs.sparkSession, listing)
+        case _ => false
+      }
+    case _ => false
   }
 
   /** Idempotently install on a live session. */

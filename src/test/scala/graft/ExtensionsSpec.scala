@@ -87,11 +87,16 @@ class ExtensionsSpec extends SparkSuite {
     val small = graft.plans.SmallSort
     withExtSession { s2 =>
       assert(s2.sessionState.planner.strategies.count(_ eq small) == 1)
-      val df = s2.range(100).orderBy(col("id").desc)
-      assert(df.head() == 99L)
-      // A narrow chain over a small leaf sorts in place.
+      val df = Tables.region(s2, sfDir).select(col("r_regionkey")).orderBy(col("r_regionkey").desc)
+      assert(df.head().getInt(0) == 4)
+      // A narrow chain over a small file scan sorts in place.
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("Coalesce 1") && !plan.contains("Gather"), plan)
+      // A range is not a file scan: it gathers.
+      val range = s2.range(100).orderBy(col("id").desc)
+      assert(range.head() == 99L)
+      val rangePlan = range.queryExecution.executedPlan.toString
+      assert(rangePlan.contains("Gather") && !rangePlan.contains("Coalesce"), rangePlan)
     }
     small.register(spark)
     small.register(spark) // idempotent

@@ -73,17 +73,31 @@ class PairPayloadPlanSpec extends SparkSuite {
     // candidate (da, db) frame, re-join BOTH embedding payloads, THEN
     // dedup — the distinct's exchange carries two ~1 KB arrays per
     // pair row. The checker must see it, or the green tests above are
-    // vacuous.
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val cand = e.select(col("label"), col("vec_id").as("da"))
-      .join(e.select(col("label"), col("vec_id").as("db")), Seq("label"))
-      .filter(col("da") < col("db"))
-    val bad = cand
-      .join(e.select(col("vec_id").as("da"), col("embedding").as("ea")), Seq("da"))
-      .join(e.select(col("vec_id").as("db"), col("embedding").as("eb")), Seq("db"))
-      .distinct()
-    assert(maxPayloadPerShuffle(bad) >= 2,
-      "checker failed to flag the known-bad pair-payload shape")
+    // vacuous. It reads a 4-file copy of embeddings: the one-file table
+    // plans as one partition and nothing above it shuffles.
+    def bad(e: DataFrame): DataFrame = {
+      val cand = e.select(col("label"), col("vec_id").as("da"))
+        .join(e.select(col("label"), col("vec_id").as("db")), Seq("label"))
+        .filter(col("da") < col("db"))
+      cand
+        .join(e.select(col("vec_id").as("da"), col("embedding").as("ea")), Seq("da"))
+        .join(e.select(col("vec_id").as("db"), col("embedding").as("eb")), Seq("db"))
+        .distinct()
+    }
+    SparkEntry.prepare(spark)
+    val dir = java.nio.file.Files.createTempDirectory("pairpayload").toFile
+    try {
+      val split = s"${dir.getPath}/embeddings"
+      spark.read.parquet(s"$sfDir/embeddings.parquet").repartition(4).write.parquet(split)
+      val pick = (df: DataFrame) => df.select(col("vec_id"), col("embedding"), col("label"))
+      assert(maxPayloadPerShuffle(bad(pick(Tables.read(spark, split)))) >= 2,
+        "checker failed to flag the known-bad pair-payload shape")
+      assert(maxPayloadPerShuffle(bad(pick(Tables.embeddings(spark, sfDir)))) == 0)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(dir)
+    }
   }
 }

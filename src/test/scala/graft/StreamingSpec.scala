@@ -321,4 +321,33 @@ class StreamingSpec extends SparkSuite {
       rm(new java.io.File(root))
     }
   }
+
+  // A micro-batch over one small file is not planned as one partition:
+  // the file source's batch relation is streaming, and stateful
+  // operators in the same micro-batch need their own partitioning.
+  test("a file-stream micro-batch over one file plans no Coalesce") {
+    import spark.implicits._
+    graft.plans.SmallSort.register(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft_onefile_").toString
+    (0 until 40).map(i => Ev(i.toLong, ts(i), if (i % 2 == 0) "view" else "click", i.toDouble))
+      .toDF().coalesce(1).write.parquet(s"$root/src")
+    val stream = spark.readStream.schema(spark.read.parquet(s"$root/src").schema)
+      .parquet(s"$root/src")
+    val q = stream.filter(col("event_type") === "view").select(col("user_id"), col("value"))
+      .writeStream.format("memory").queryName("one_file_views").outputMode(OutputMode.Append).start()
+    try {
+      q.processAllAvailable()
+      val got = spark.table("one_file_views").as[(Long, Double)].collect().sorted.toSeq
+      assert(got == (0 until 40 by 2).map(i => (i.toLong, i.toDouble)))
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("FileScan") && !plan.contains("Coalesce"), plan)
+    } finally {
+      q.stop()
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(new java.io.File(root))
+    }
+  }
 }
