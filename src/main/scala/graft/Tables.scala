@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Memo
+import graft.plans.SmallSort
 
 /** Typed loaders for the fixture tables (see /root/repo/FIXTURES.md).
   *
@@ -80,13 +81,10 @@ object Tables {
     * `repartition(n)` ALWAYS shuffles every row regardless of input split
     * count, so baking it in unconditionally would add a full extra pass
     * over the corpus to every text-pipeline plan at the 100 TB design
-    * point. The split count comes from the planned scan:
-    * `rdd.getNumPartitions` resolves FilePartition packing (under
-    * `spark.sql.files.maxPartitionBytes` / `openCostInBytes`) at PLANNING
-    * time — no job runs, and the probed plan shares the scan's FileIndex
-    * so the file listing is not repeated. On any input whose scan already
-    * yields >= half the cores the helper is the identity and the plan
-    * stays Exchange-free (pinned by PlanEvidenceSpec).
+    * point. On any input whose scan already yields >= half the cores the
+    * helper is the identity and the plan stays Exchange-free (pinned by
+    * PlanEvidenceSpec). The split count is [[scanWidth]]'s, read from the
+    * file listing, so fanning out builds nothing and runs nothing.
     *
     * A small one-split scan plans as `Coalesce 1` over the scan
     * ([[graft.plans.SmallSort]]), which reports one partition, so keyed
@@ -98,16 +96,35 @@ object Tables {
     * Fan out the corpus-sized frame, never a constant slice of it.
     * Catalyst pushes a filter on a fanned frame under its round-robin
     * exchange, so each slice (`doc_id < 20`) starts its own job that
-    * scans and shuffles the table again. Slices read the plain scan.
+    * scans and shuffles the table again. Slices read the plain scan. A
+    * frame built from more than one scan (a join, a union) is not a
+    * scan: fan out the scan it starts from (q309's self-join, q313's
+    * doubled ids).
     */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (scanWidth(df) * 2 >= target) df else df.repartition(target)
   }
 
-  /** The planned scan's split count (see [[fanOut]]: resolved at
-    * planning time, no job). */
-  def scanWidth(df: DataFrame): Int = df.rdd.getNumPartitions
+  /** The number of splits the frame's file scan reads, counted from the
+    * file index's listing as `FileSourceScanExec` packs them
+    * ([[graft.plans.SmallSort.splits]]). The frame must be a
+    * `Project`/`Filter` chain over one non-bucketed, non-streaming file
+    * relation whose index is a listing; anything else fails the
+    * `require`. The count is read from the analyzed plan, so no plan is
+    * made, no reader is built, no Hadoop conf is broadcast and no job
+    * runs. (The width used to come from the planned frame's
+    * `rdd.getNumPartitions`: that planned the whole frame and built its
+    * reader on every call, and over q309's self-join it ran the
+    * broadcast's job while the DataFrame was being built.)
+    */
+  def scanWidth(df: DataFrame): Int = {
+    val plan = df.queryExecution.analyzed
+    val width = SmallSort.scanUnder(plan).flatMap(SmallSort.splits)
+    require(width.isDefined,
+      s"scanWidth needs a Project/Filter chain over one non-bucketed file scan, got:\n$plan")
+    width.get
+  }
 
   /** `events.parquet` — the fixture's timestamp physical type has varied
     * across driver generations: INT64 TIMESTAMP(NANOS) (which Spark 4

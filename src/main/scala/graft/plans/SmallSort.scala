@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, PythonUDAF, SortOrd
 import org.apache.spark.sql.catalyst.planning.{PhysicalAggregation, ScanOperation}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, LogicalQueryStage, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
-import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{CoalesceExec, PartitionedFileUtil, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.aggregate.AggUtils
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileSourceStrategy, HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.internal.SQLConf
@@ -114,16 +114,19 @@ import org.apache.spark.sql.internal.SQLConf
   * above a row-expanding join loses the post-shuffle tasks AQE gave it
   * (q311's pair ranking). The gate cannot see these from the scan.
   *
-  * The gate is the threshold above plus the file index's own listing:
-  * exactly one file, no longer than `FilePartition.maxSplitBytes` for
-  * that listing, so it is one split. The gate never asks the planned
-  * scan for its RDD (`inputRDD`): that builds the reader, with a
-  * broadcast of the Hadoop conf, on every plan and every AQE re-plan,
-  * and tripled a workload's planning time when tried. Files that are
-  * many, larger than a split, or above the threshold keep Spark's plan
+  * The gate is the threshold above plus [[splits]], the one split count
+  * of the repository: it packs the file index's own listing the way
+  * `FileSourceScanExec` does, and the gate asks that it be 1.
+  * `Tables.scanWidth` reads the same count to size a fan-out. The gate
+  * never asks the planned scan for its RDD (`inputRDD`): that builds the
+  * reader, with a broadcast of the Hadoop conf, on every plan and every
+  * AQE re-plan, and tripled a workload's planning time when tried. Scans
+  * of more than one split or above the threshold keep Spark's plan
   * (lineitem at sf0.1, every sf1 table), and so do bucketed scans (they
   * report their own hash partitioning) and streaming scans (a
-  * micro-batch's stateful operators need their own partitioning).
+  * micro-batch's stateful operators need their own partitioning). A sort
+  * whose narrow chain ends in such a one-split scan adds no coalesce of
+  * its own: the scan case has already put the chain in one partition.
   *
   * Streaming aggregates are never taken (AQE does not run in a
   * micro-batch, and Spark 4.1's streaming planner plans them with its
@@ -144,10 +147,12 @@ object SmallSort extends SparkStrategy {
       AggUtils.planAggregateWithoutDistinct(Nil, aggs, result, CoalesceExec(1, planLater(child)))
     case Sort(order, true, child, _) if small(child) =>
       val input = planLater(child)
-      val one = if (inputsKnownSmall(child)) CoalesceExec(1, input) else GatherExec(input)
+      val one =
+        if (scanUnder(child).exists(oneSplitScan)) input // the scan case coalesces it
+        else if (inputsKnownSmall(child)) CoalesceExec(1, input)
+        else GatherExec(input)
       SortExec(order, global = true, one) :: Nil
-    case ScanOperation(_, _, _, l @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _))
-        if !l.isStreaming && fs.bucketSpec.isEmpty && small(l) && oneSplit(fs) =>
+    case ScanOperation(_, _, _, l: LogicalRelation) if oneSplitScan(l) =>
       FileSourceStrategy(plan).map(CoalesceExec(1, _))
     case _ => Nil
   }
@@ -158,7 +163,7 @@ object SmallSort extends SparkStrategy {
   }
 
   private def inputsKnownSmall(child: LogicalPlan): Boolean =
-    child.collectLeaves().forall(leaf => small(leaf) && (materialized(leaf) || narrow(child)))
+    child.collectLeaves().forall(leaf => small(leaf) && (materialized(leaf) || scanUnder(child).isDefined))
 
   private def materialized(leaf: LogicalPlan): Boolean = leaf match {
     case stage: LogicalQueryStage => stage.isMaterialized
@@ -172,24 +177,45 @@ object SmallSort extends SparkStrategy {
     case _ => false
   }
 
-  /** A `Project`/`Filter` chain down to a file scan. */
-  private def narrow(p: LogicalPlan): Boolean = p match {
-    case Project(_, child) => narrow(child)
-    case Filter(_, child) => narrow(child)
-    case _: LogicalRelation => true
-    case _ => false
+  /** The file scan at the end of a `Project`/`Filter` chain. */
+  private[graft] def scanUnder(p: LogicalPlan): Option[LogicalRelation] = p match {
+    case Project(_, child) => scanUnder(child)
+    case Filter(_, child) => scanUnder(child)
+    case l: LogicalRelation => Some(l)
+    case _ => None
   }
 
-  /** The file index's listing, as it already holds it, is one file the
-    * scan reads as one split. */
-  private def oneSplit(fs: HadoopFsRelation): Boolean = fs.location match {
-    case index: PartitioningAwareFileIndex =>
-      val listing = index.listFiles(Nil, Nil)
-      listing.flatMap(_.files) match {
-        case Seq(file) => file.getLen <= FilePartition.maxSplitBytes(fs.sparkSession, listing)
-        case _ => false
+  /** A small file scan that reads one split. */
+  private def oneSplitScan(l: LogicalRelation): Boolean = small(l) && splits(l).contains(1)
+
+  /** How many splits a non-bucketed, non-streaming file scan reads,
+    * counted from its file index's listing the way `FileSourceScanExec`
+    * packs them: each file cut at `FilePartition.maxSplitBytes` for that
+    * listing, the pieces sorted largest first and packed by
+    * `FilePartition.getFilePartitions`. The index already holds the
+    * listing, so this builds no reader, broadcasts no Hadoop conf and
+    * runs no job. `None` for any other relation, or an index that is not
+    * a listing (`PartitioningAwareFileIndex`). The listing is taken
+    * without partition filters, so over a partitioned table it counts
+    * the splits of every partition. */
+  def splits(l: LogicalRelation): Option[Int] = l match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) if !l.isStreaming && fs.bucketSpec.isEmpty =>
+      fs.location match {
+        case index: PartitioningAwareFileIndex =>
+          val spark = fs.sparkSession
+          val listing = index.listFiles(Nil, Nil)
+          val maxSplit = FilePartition.maxSplitBytes(spark, listing)
+          val pieces = listing.flatMap { dir =>
+            dir.files.flatMap { file =>
+              val path = file.getPath
+              PartitionedFileUtil.splitFiles(file, path,
+                fs.fileFormat.isSplitable(spark, fs.options, path), maxSplit, dir.values)
+            }
+          }.sortBy(_.length)(Ordering[Long].reverse)
+          Some(FilePartition.getFilePartitions(spark, pieces, maxSplit).size)
+        case _ => None
       }
-    case _ => false
+    case _ => None
   }
 
   /** Idempotently install on a live session. */

@@ -1643,13 +1643,15 @@ object Dedup extends Q.Module {
     "✦ asymmetric near-dup: containment ≥ 0.8 pairs the Jaccard gate misses",
     (s, d) => {
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val corpus = base.as("x")
+      // The scan on the x side fans out: the broadcast left join keeps
+      // its stream side's partitions, so the corpus is spread as before.
+      val corpus = Tables.fanOut(base).as("x")
         .join(base.as("y"), col("y.doc_id") === col("x.doc_id") + 1, "left")
         .select(col("x.doc_id").as("doc_id"),
           when(col("x.doc_id") % 25 === 0 && col("y.text").isNotNull,
             concat(col("x.text"), lit(" "), col("y.text")))
             .otherwise(col("x.text")).as("text"))
-      val pairs = jaccardPairs(shinglesOf(Tables.fanOut(corpus)).persist())
+      val pairs = jaccardPairs(shinglesOf(corpus).persist())
       // shingle persist: harness-owned cache (q47's rule).
       pairs
         .withColumn("containment", col("inter").cast("double")
@@ -1675,6 +1677,48 @@ object Dedup extends Q.Module {
     WHERE CAST(inter AS DOUBLE) / CAST(LEAST(na, nb) AS DOUBLE) >= 0.8
     ORDER BY da, db"""))
 
+  /** q313's pairs from a `(doc_id, text)` corpus: winnowing fingerprints,
+    * the hot-fingerprint cutoff and the ≥ 2-shared gate, ordered. */
+  private[graft] def winnowPairs(s: SparkSession, corpus: DataFrame): DataFrame = {
+    // 3-gram stream from the fused kernel (r18 — same swap as
+    // shinglesWithDfOf; WordNgramsSpec pins byte-identity), hashed by
+    // a transform whose lambda is now just the md5 chain: the
+    // slice/concat_ws interpreted work is gone, the md5 — the
+    // irreducible per-element cost — stays.
+    graft.functions.WordNgrams.register(s)
+    val hs = transform(
+      graft.functions.WordNgrams.wordNgrams(col("text"), 3), g =>
+        conv(substring(md5(g), 1, 8), 16, 10).cast("long"))
+    // ≥ 6 words ⇒ ≥ 4 3-gram hashes ⇒ ≥ 1 window of 4 (the kernel
+    // yields size(w) − 2 grams, so the old size(w) >= 6 guard is
+    // exactly size(hs) >= 4).
+    // `hs` MUST be materialized as a column before the window
+    // transform references it: an array-valued expression inlined
+    // inside a lambda is re-evaluated per element, turning the
+    // per-doc cost from L md5s into L² (the r13 sf1 sweep measured
+    // the inline shape at 124 s vs 2.6 s materialized — the whole
+    // q313 blowup). size(hs) − 3 ≡ size(w) − 5.
+    val fps = corpus
+      .withColumn("hs", hs)
+      .filter(size(col("hs")) >= 4)
+      .select(col("doc_id"),
+        explode(array_distinct(
+          transform(sequence(lit(1), size(col("hs")) - 3), j =>
+            array_min(slice(col("hs"), j, lit(4)))))).as("fp"))
+      .withColumn("df",
+        count(lit(1)).over(Window.partitionBy(col("fp"))))
+      .filter(col("df") <= 50)
+      .persist()
+    // fps persist: pair join reads both sides — harness-owned cache.
+    val a = fps.select(col("doc_id").as("da"), col("fp"))
+    val b = fps.select(col("doc_id").as("db"), col("fp"))
+    a.join(b.hint("shuffle_hash"), Seq("fp"))
+      .filter(col("da") < col("db"))
+      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= 2)
+      .orderBy(col("da"), col("db"))
+  }
+
   // --- q313: WINNOWING FINGERPRINT DEDUP (MOSS-style) — the THIRD
   //     fingerprint-selection scheme in the registry, with a guarantee
   //     the others lack: q54 hashes position-weighted wholes, q275
@@ -1693,47 +1737,13 @@ object Dedup extends Q.Module {
     "q313_winnowing_dedup",
     "✦ near-dup: winnowing (min-hash-per-window) fingerprints, inverted-index pairs sharing ≥ 2",
     (s, d) => {
-      val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val corpus = Tables.fanOut(base.unionByName(
-        base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 10000).as("doc_id"), col("text"))))
-      // 3-gram stream from the fused kernel (r18 — same swap as
-      // shinglesWithDfOf; WordNgramsSpec pins byte-identity), hashed by
-      // a transform whose lambda is now just the md5 chain: the
-      // slice/concat_ws interpreted work is gone, the md5 — the
-      // irreducible per-element cost — stays.
-      graft.functions.WordNgrams.register(s)
-      val hs = transform(
-        graft.functions.WordNgrams.wordNgrams(col("text"), 3), g =>
-          conv(substring(md5(g), 1, 8), 16, 10).cast("long"))
-      // ≥ 6 words ⇒ ≥ 4 3-gram hashes ⇒ ≥ 1 window of 4 (the kernel
-      // yields size(w) − 2 grams, so the old size(w) >= 6 guard is
-      // exactly size(hs) >= 4).
-      // `hs` MUST be materialized as a column before the window
-      // transform references it: an array-valued expression inlined
-      // inside a lambda is re-evaluated per element, turning the
-      // per-doc cost from L md5s into L² (the r13 sf1 sweep measured
-      // the inline shape at 124 s vs 2.6 s materialized — the whole
-      // q313 blowup). size(hs) − 3 ≡ size(w) − 5.
-      val fps = corpus
-        .withColumn("hs", hs)
-        .filter(size(col("hs")) >= 4)
-        .select(col("doc_id"),
-          explode(array_distinct(
-            transform(sequence(lit(1), size(col("hs")) - 3), j =>
-              array_min(slice(col("hs"), j, lit(4)))))).as("fp"))
-        .withColumn("df",
-          count(lit(1)).over(Window.partitionBy(col("fp"))))
-        .filter(col("df") <= 50)
-        .persist()
-      // fps persist: pair join reads both sides — harness-owned cache.
-      val a = fps.select(col("doc_id").as("da"), col("fp"))
-      val b = fps.select(col("doc_id").as("db"), col("fp"))
-      a.join(b.hint("shuffle_hash"), Seq("fp"))
-        .filter(col("da") < col("db"))
-        .groupBy(col("da"), col("db")).agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .orderBy(col("da"), col("db"))
+      // The q46 doubling from one fanned scan: every 10th doc is also
+      // emitted under doc_id + 10000; a NULL id stays one row.
+      val corpus = Tables.fanOut(Tables.documents(s, d)).select(
+        explode(when(col("doc_id") % 10 === 0,
+          array(col("doc_id"), col("doc_id") + 10000))
+          .otherwise(array(col("doc_id")))).as("doc_id"), col("text"))
+      winnowPairs(s, corpus)
     },
     Some(s"""WITH corpus AS (
       SELECT doc_id, text FROM documents

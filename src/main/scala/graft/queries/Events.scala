@@ -131,25 +131,26 @@ object Events extends Q.Module {
   // --- q39: as-of join (J5): attribute each purchase to the latest view
   //     at-or-before it for the same user. Spark has no asof builtin; the
   //     scalable pattern is union-tag + last(ignoreNulls) over one ordered
-  //     window — a single shuffle on user_id, no range-join blowup.
+  //     window — a single shuffle on user_id, no range-join blowup. Both
+  //     sides come from one scan: views and purchases are tagged in one
+  //     projection (a view carries its own id as `view_id`, a purchase
+  //     NULL), so the events table is read once, not once per side.
   private val q39 = Q(
     "q39_asof_join",
     "J5 merge_asof: purchase → most recent prior view per user",
     (s, d) => {
       val e = Tables.events(s, d).select(col("user_id"), col("event_id"),
         col("event_type"), micros.as("us"))
-      val views = e.filter(col("event_type") === "view")
-        .select(col("user_id"), col("us"), lit(0).as("kind"),
-          col("event_id"), col("event_id").as("view_id"))
-      val purch = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("us"), lit(1).as("kind"),
-          col("event_id"), lit(null).cast("long").as("view_id"))
+      val isView = col("event_type") === "view"
+      val tagged = e.filter(col("event_type").isin("view", "purchase"))
+        .select(col("user_id"), col("us"), when(isView, 0).otherwise(1).as("kind"),
+          col("event_id"), when(isView, col("event_id")).as("view_id"))
       // At equal timestamps a view sorts before the purchase (kind 0<1), so
       // `ts <=` semantics hold; among equal-ts views the later event_id wins.
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("us"), col("kind"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      views.unionByName(purch)
+      tagged
         .withColumn("attr_view", last(col("view_id"), ignoreNulls = true).over(w))
         .filter(col("kind") === 1)
         .select(col("event_id").as("purchase_id"), col("user_id"),

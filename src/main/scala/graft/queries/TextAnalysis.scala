@@ -234,6 +234,27 @@ object TextAnalysis extends Q.Module {
     FROM canon c JOIN kept k ON k.doc_id = c.doc_id
     GROUP BY k.lang ORDER BY k.lang"""))
 
+  /** q97's counts: per training doc, its distinct word 8-grams that
+    * also occur in an eval doc, ordered by `doc_id`. */
+  private[graft] def contaminated(s: org.apache.spark.sql.SparkSession,
+      training: DataFrame, evalDocs: DataFrame): DataFrame = {
+    // Fused codegen'd 8-gram kernel (r18, Dedup.shinglesWithDfOf's
+    // swap): byte-identical stream, and the old size(w) >= 8 guard is
+    // subsumed by the kernel's empty-array-below-n contract.
+    graft.functions.WordNgrams.register(s)
+    def gids(docs: DataFrame): DataFrame = docs
+      .select(col("doc_id"),
+        explode(array_distinct(
+          graft.functions.WordNgrams.wordNgrams(col("text"), 8)))
+          .as("gram"))
+      .select(col("doc_id"), xxhash64(col("gram")).as("gid"))
+    gids(training)
+      .join(broadcast(gids(evalDocs).select(col("gid"))), Seq("gid"), "left_semi")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_contaminated_grams"))
+      .orderBy(col("doc_id"))
+  }
+
   // --- q97: benchmark DECONTAMINATION — flag training documents that
   //     share any word-8-gram with an evaluation set (docs 0-19 here),
   //     the overlap check every pretraining pipeline runs before
@@ -246,8 +267,10 @@ object TextAnalysis extends Q.Module {
   //     64-bit collision between two distinct grams that also lands in
   //     the eval set is ~2^-40. Eval docs are re-injected under shifted
   //     ids (like q46's doubling) so the fixture provably contains
-  //     contamination. Only the training side fans out; the eval slice
-  //     and its re-injected copy read the plain scan (see Tables.fanOut).
+  //     contamination. The training side is one projection over the
+  //     fanned corpus (every doc with an id, the eval docs under their
+  //     shifted ids), so the corpus is read once for it; only the
+  //     broadcast eval slice reads the plain scan (see Tables.fanOut).
   //     The eval grams are not deduplicated: a left-semi join emits each
   //     left row at most once whatever the duplicates on its build side.
   private val q97 = Q(
@@ -256,24 +279,10 @@ object TextAnalysis extends Q.Module {
     (s, d) => {
       val evalDocs = Tables.documents(s, d).filter(col("doc_id") < 20)
         .select(col("doc_id"), col("text"))
-      val training = docs(s, d).filter(col("doc_id") >= 20)
-        .select(col("doc_id"), col("text"))
-        .unionByName(evalDocs.select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      // Fused codegen'd 8-gram kernel (r18, Dedup.shinglesWithDfOf's
-      // swap): byte-identical stream, and the old size(w) >= 8 guard is
-      // subsumed by the kernel's empty-array-below-n contract.
-      graft.functions.WordNgrams.register(s)
-      def gids(docs: DataFrame): DataFrame = docs
-        .select(col("doc_id"),
-          explode(array_distinct(
-            graft.functions.WordNgrams.wordNgrams(col("text"), 8)))
-            .as("gram"))
-        .select(col("doc_id"), xxhash64(col("gram")).as("gid"))
-      gids(training)
-        .join(broadcast(gids(evalDocs).select(col("gid"))), Seq("gid"), "left_semi")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_contaminated_grams"))
-        .orderBy(col("doc_id"))
+      val training = docs(s, d).filter(col("doc_id").isNotNull)
+        .select(when(col("doc_id") < 20, col("doc_id") + 10000)
+          .otherwise(col("doc_id")).as("doc_id"), col("text"))
+      contaminated(s, training, evalDocs)
     },
     Some("""WITH corpus AS (
       SELECT doc_id, text FROM documents

@@ -115,6 +115,16 @@ class ContractSpec extends SparkSuite {
     assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
   }
 
+  // A fan-out width once came from `rdd.getNumPartitions` of the planned
+  // frame: every call planned it, built its scan's reader (broadcasting
+  // the Hadoop conf) and, over a broadcast join, ran a job while the
+  // DataFrame was being built. Scan widths come from the file listing
+  // (Tables.scanWidth).
+  test("no planning probe: no getNumPartitions in src/main") {
+    val n = "getNumPartitions"
+    assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
+  }
+
   test("oracle SQL mentions only fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

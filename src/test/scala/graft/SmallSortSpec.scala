@@ -24,7 +24,8 @@ import graft.plans.{GatherExec, SmallSort}
   * are unchanged. A small global aggregate over a finished keyed
   * aggregate stage coalesces in place, and keeps Spark's plan otherwise.
   * A small one-split file scan plans as one partition, so nothing above
-  * it shuffles; a multi-file copy of the same table keeps Spark's plan.
+  * it shuffles, and a sort over it adds no second coalesce; a multi-file
+  * copy of the same table keeps Spark's plan.
   *
   * Every sf0.001 table is one file, so the cases written for an
   * exchange over a scan read [[splitDir]], where orders and events are
@@ -483,5 +484,17 @@ class SmallSortSpec extends SparkSuite with AdaptiveSparkPlanHelper with BeforeA
         s"final plan:\n${plan(df)}")
       assert(rows.nonEmpty && rows == withoutSmallSort(build().collect().toSeq))
     } finally cached.unpersist(blocking = true)
+  }
+
+  test("(u) a sort over a one-split scan plans one Coalesce 1, the scan's") {
+    // The scan case already coalesced the scan, so the sort path adds no
+    // second coalesce above it.
+    val df = query("q02_project_derive")
+    val rows = df.collect().toSeq
+    val coalesces = nodes(df).collect { case c: CoalesceExec => c }
+    assert(coalesces.size == 1 && sortInputs(df).map(coalesced) == Seq(true) &&
+      scansCoalesced(df) && exchanges(df).isEmpty, plan(df))
+    val ref = query("q02_project_derive")
+    assert(rows.nonEmpty && rows == withoutSmallSort(ref.collect().toSeq))
   }
 }
