@@ -47,11 +47,15 @@ object SparkEntry {
     *    table loaded before the first events read be inferred again. Only
     *    `events.ts` can be `TIMESTAMP(NANOS)`; every other fixture
     *    timestamp is µs, which the conf leaves alone.
-    *  - the [[graft.plans.SmallSort]] planner strategy is installed.
+    *  - the whole engine is installed: the planner strategy, the
+    *    optimizer rule and the six SQL functions of
+    *    [[graft.plans.GraftExtensions]]'s one list, the same list its
+    *    `withExtensions` route injects. Query code never registers a
+    *    function or changes session state itself.
     */
   def prepare(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.plans.SmallSort.register(spark)
+    graft.plans.GraftExtensions.install(spark)
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

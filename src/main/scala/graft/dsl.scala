@@ -57,6 +57,12 @@ object dsl {
     (dsumWide(x * y) - dsum(x) * dsum(y) / n) / (n - lit(1.0))
   }
 
+  /** Sum of an array of doubles as a sequential left fold from 0.0 in
+    * element order, the order DuckDB's `list_sum` folds, so the two
+    * engines agree bit for bit (a `sum` aggregate's partial sums would
+    * not). */
+  def fsum(c: Column): Column = aggregate(c, lit(0.0), (acc, x) => acc + x)
+
   /** Deterministic multiplicative hash `id·2654435761 mod m` (Knuth's
     * constant), the engine's no-rand() sampling/assignment primitive
     * (q102/q131/q141). The product runs in DECIMAL(38,0): a LONG multiply

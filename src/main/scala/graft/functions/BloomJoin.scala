@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Bloom semi-join reduction helpers (q165).
@@ -46,13 +45,11 @@ object BloomJoin {
   def mightContain(filter: Column, key: Column): Column =
     call_function("graft_might_contain", filter, key)
 
+  /** The registry entry of `graft_might_contain`, built once. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.two("graft_might_contain", classOf[BloomFilterMightContain])(
+      new BloomFilterMightContain(_, _))
+
   /** Register the probe under a `graft_` name on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[Expression]) =>
-        FunctionArity.two("graft_might_contain", children)(
-          new BloomFilterMightContain(_, _)))
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.SparkSession
@@ -101,13 +100,10 @@ object CosineSimilarity {
   def cosineSim(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 
+  /** The registry entry of `cosine_sim`, built once. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.two("cosine_sim", classOf[CosineSimilarity])(CosineSimilarity(_, _))
+
   /** Register `cosine_sim` for SQL callers on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"),
-      info,
-      (children: Seq[Expression]) =>
-        FunctionArity.two("cosine_sim", children)(CosineSimilarity(_, _)))
-  }
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSession
@@ -116,13 +115,10 @@ object IntDotProduct {
   def intDot(a: Column, b: Column): Column =
     call_function("int_dot", a, b)
 
+  /** The registry entry of `int_dot`, built once. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.two("int_dot", classOf[IntDotProduct])(IntDotProduct(_, _))
+
   /** Register `int_dot` for SQL callers on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[IntDotProduct].getName, "int_dot")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int_dot"),
-      info,
-      (children: Seq[Expression]) =>
-        FunctionArity.two("int_dot", children)(IntDotProduct(_, _)))
-  }
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

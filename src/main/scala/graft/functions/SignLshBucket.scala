@@ -4,12 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSession
 
 /** Sign-random-projection LSH bucket id for an `ARRAY<FLOAT>` vector.
@@ -93,6 +92,13 @@ case class SignLshBucket(child: Expression, planes: Int)
 object SignLshBucket {
   private val MaxDims = 64
 
+  /** Planes of `lsh_bucket(v)`. */
+  val DefaultPlanes = 16
+
+  /** The bucket is a `Long` with one bit per plane: `1L << p` wraps past
+    * bit 63, so a plane count is at most 64. */
+  val MaxPlanes = 64
+
   /** coeff(p, j) = +1 iff the first hex digit of md5("p:j") is < 8 —
     * recomputable in any engine with an md5 function. */
   def coeffs(planes: Int): Array[Array[Double]] =
@@ -103,24 +109,30 @@ object SignLshBucket {
       if (firstNibble < 8) 1.0 else -1.0
     }
 
-  /** Column-API entry point (requires [[register]] on the session once). */
-  def lshBucket(v: Column): Column = call_function("lsh_bucket", v)
+  /** Column-API entry point (requires [[register]] on the session once).
+    * Plane count feeds two dials: band WIDTH (buckets per band = 2^bits)
+    * bounds in-bucket pair volume at O(N²/2^bits) per band and must GROW
+    * with corpus size (4 planes = 16 fixed buckets was the round-2 scale
+    * flaw — unbounded bucket population at 1e9 vectors); band COUNT
+    * L = planes/bits amplifies recall, detect prob = 1-(1-p^bits)^L with
+    * p = 1-θ/π per plane. q57 uses 32 planes as four independent 8-bit
+    * bands; AsofDedupSpec asserts the observed recall matches this
+    * formula against brute force. */
+  def lshBucket(v: Column, planes: Int = DefaultPlanes): Column =
+    call_function("lsh_bucket", v, lit(planes))
 
-  /** Register `lsh_bucket`. Plane count feeds two dials: band WIDTH
-    * (buckets per band = 2^bits) bounds in-bucket pair volume at
-    * O(N²/2^bits) per band and must GROW with corpus size (4 planes = 16
-    * fixed buckets was the round-2 scale flaw — unbounded bucket
-    * population at 1e9 vectors); band COUNT L = planes/bits amplifies
-    * recall, detect prob = 1-(1-p^bits)^L with p = 1-θ/π per plane. q57
-    * uses 32 planes as four independent 8-bit bands; AsofDedupSpec
-    * asserts the observed recall matches this formula against brute
-    * force. */
-  def register(spark: SparkSession, planes: Int = 16): Unit = {
-    val info = new ExpressionInfo(classOf[SignLshBucket].getName, "lsh_bucket")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lsh_bucket"),
-      info,
-      (children: Seq[Expression]) =>
-        FunctionArity.one("lsh_bucket", children)(SignLshBucket(_, planes)))
-  }
+  /** The registry entry of `lsh_bucket`, built once: `lsh_bucket(v)` has
+    * [[DefaultPlanes]] planes, `lsh_bucket(v, p)` has `p`, an INT literal
+    * in 1..[[MaxPlanes]]. The plane count is part of each call, never of
+    * the session. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.entry("lsh_bucket", classOf[SignLshBucket],
+        s"1, or 2 with an INT literal plane count in [1, $MaxPlanes],") {
+      case Seq(v) => SignLshBucket(v, DefaultPlanes)
+      case Seq(v, Literal(p: Int, IntegerType)) if p >= 1 && p <= MaxPlanes =>
+        SignLshBucket(v, p)
+    }
+
+  /** Register `lsh_bucket` for SQL callers on an existing session. */
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -243,13 +242,10 @@ object TopCells {
     call_function("top_cells", emb, cids, ces,
       org.apache.spark.sql.functions.lit(k))
 
+  /** The registry entry of `top_cells`, built once. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.four("top_cells", classOf[TopCells])(TopCells(_, _, _, _))
+
   /** Register `top_cells` for SQL/Column callers on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[TopCells].getName, "top_cells")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("top_cells"),
-      info,
-      (children: Seq[Expression]) =>
-        FunctionArity.four("top_cells", children)(TopCells(_, _, _, _)))
-  }
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

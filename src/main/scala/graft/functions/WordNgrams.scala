@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.call_function
@@ -137,13 +136,10 @@ object WordNgrams {
   def wordNgrams(text: Column, n: Int): Column =
     call_function("word_ngrams", text, org.apache.spark.sql.functions.lit(n))
 
+  /** The registry entry of `word_ngrams`, built once. */
+  private[graft] val entry: FunctionArity.Entry =
+    FunctionArity.two("word_ngrams", classOf[WordNgrams])(WordNgrams(_, _))
+
   /** Register `word_ngrams` for SQL callers on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_ngrams"),
-      info,
-      (children: Seq[Expression]) =>
-        FunctionArity.two("word_ngrams", children)(WordNgrams(_, _)))
-  }
+  def register(spark: SparkSession): Unit = FunctionArity.register(spark, entry)
 }

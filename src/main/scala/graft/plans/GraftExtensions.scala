@@ -1,68 +1,60 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import graft.functions.{CosineSimilarity, FunctionArity, IntDotProduct, SignLshBucket}
+import graft.functions.{BloomJoin, CosineSimilarity, FunctionArity, IntDotProduct, SignLshBucket, TopCells, WordNgrams}
 
-/** The library's single deployment entry point for Catalyst extensions —
-  * the `SparkSessionExtensions` route (SURVEY.md §2.10 rung c, the
-  * "permanent deployment" half of ThresholdLevenshteinRule's contract):
+/** The one list of what the engine installs on a session — the
+  * [[SmallSort]] planner strategy, [[ThresholdLevenshteinRule]] and the
+  * six SQL functions in [[GraftExtensions.functions]] — and its two
+  * install routes:
   *
   * {{{
-  *   // at session build time:
+  *   // at session build time (SURVEY.md §2.10 rung c):
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   *   // or config-only, no code (spark-submit / thriftserver / connect):
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
+  *   // on a live session (SparkEntry.prepare, before every registry call):
+  *   GraftExtensions.install(spark)
   * }}}
   *
-  * Injects everything the per-session `register(spark)` helpers install
-  * imperatively, but at the right lifecycle point: the optimizer rule
-  * rides every session built from the context (injectOptimizerRule runs
-  * it in the same post-batches slot as `experimental.extraOptimizations`),
-  * the [[SmallSort]] planner strategy runs ahead of the built-in
-  * strategies (as `experimental.extraStrategies` does), and the four
-  * codegen'd functions are in the registry before any SQL text parses,
-  * so `cosine_sim` / `int_dot` / `lsh_bucket` /
-  * `graft_might_contain` work from pure-SQL clients that never touch the Scala API.
-  *
-  * The imperative `register(spark)` helpers stay — tests and notebook
-  * sessions attach to an already-built session — but both routes bind
-  * the SAME builders, asserted by ExtensionsSpec.
+  * The build-time route injects the optimizer rule (in the same
+  * post-batches slot as `experimental.extraOptimizations`), runs the
+  * strategy ahead of the built-in strategies (as
+  * `experimental.extraStrategies` does) and puts the functions in the
+  * registry before any SQL text parses, so pure-SQL clients that never
+  * touch the Scala API can call them. The live route appends the same
+  * strategy and rule when they are absent and puts the same function
+  * entries. Each entry is one stable value owned by its function object,
+  * so both routes bind the same builders and a repeat install puts an
+  * equal pair (ExtensionsSpec).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => ThresholdLevenshteinRule)
     ext.injectPlannerStrategy(_ => SmallSort)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
 
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) =>
-        FunctionArity.two("cosine_sim", children)(CosineSimilarity(_, _))))
+object GraftExtensions {
 
-    // 16 hyperplanes = the library default (q57 narrows per-call via the
-    // Scala API; SQL callers get the documented default band width).
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bucket"),
-      new ExpressionInfo(classOf[SignLshBucket].getName, "lsh_bucket"),
-      (children: Seq[Expression]) =>
-        FunctionArity.one("lsh_bucket", children)(SignLshBucket(_, 16))))
+  /** `cosine_sim`, `lsh_bucket`, `int_dot`, `graft_might_contain`,
+    * `word_ngrams` and `top_cells`. */
+  val functions: Seq[FunctionArity.Entry] = Seq(
+    CosineSimilarity.entry,
+    SignLshBucket.entry,
+    IntDotProduct.entry,
+    BloomJoin.entry,
+    WordNgrams.entry,
+    TopCells.entry)
 
-    ext.injectFunction((
-      FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[IntDotProduct].getName, "int_dot"),
-      (children: Seq[Expression]) =>
-        FunctionArity.two("int_dot", children)(IntDotProduct(_, _))))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[Expression]) =>
-        FunctionArity.two("graft_might_contain", children)(
-          new BloomFilterMightContain(_, _))))
+  /** Idempotently install the strategy, the rule and the functions on a
+    * live session; cheap enough to run before every query. */
+  def install(spark: SparkSession): Unit = {
+    SmallSort.register(spark)
+    ThresholdLevenshteinRule.install(spark)
+    functions.foreach(FunctionArity.register(spark, _))
   }
 }

@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.IntegerType
   * This is SURVEY.md §2.10 rung (c) — a `Rule[LogicalPlan]` extension —
   * used the Spark-first way: the rewrite target is a BUILT-IN kernel, the
   * rule just makes the efficient plan the default for naive query text.
-  * Install on a live session via `spark.experimental.extraOptimizations`
-  * (or session builder `withExtensions(_.injectOptimizerRule(...))` for a
-  * permanent deployment).
+  * It is on [[GraftExtensions]]' install list: injected at session build
+  * time, or appended to `spark.experimental.extraOptimizations` on a live
+  * session (`SparkEntry.prepare` before every registry call).
   *
   * Filter AND Join conditions are rewritten — user rules run after the
   * main optimizer batches, where predicate pushdown has usually folded

@@ -65,7 +65,6 @@ object Dedup extends Q.Module {
     // counts DOWN below 1) is subsumed: the kernel returns an EMPTY
     // array below n words and explode drops the doc — the same "no
     // shingles" semantics the filter enforced, one split() cheaper.
-    graft.functions.WordNgrams.register(corpus.sparkSession)
     val sh0 = corpus
       .select(col("doc_id"),
         explode(array_distinct(
@@ -540,10 +539,11 @@ object Dedup extends Q.Module {
   //     O(N²) in the block size. EmbDedupAnnSpec pins the swap's
   //     honesty: the ANN result is a strict SUBSET of the exact pairs
   //     (candidates shrink, the >= 0.35 verify is identical) with
-  //     recall >= 0.8 on a clustered corpus.
+  //     recall >= 0.8 on a clustered corpus. `cap` is the ANN mode's
+  //     per-cell cap (Scale.ivfProbeMap).
   private[graft] def embCosinePairs(s: SparkSession, d: String,
-      forceAnn: Option[Boolean] = None): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
+      forceAnn: Option[Boolean] = None,
+      cap: Long = Scale.ivfCellCap): DataFrame = {
     val cos = graft.functions.CosineSimilarity.cosineSim _
     val e = Tables.embeddings(s, d)
     if (forceAnn.getOrElse(Vectors.auditUseAnn(s, d))) {
@@ -566,7 +566,7 @@ object Dedup extends Q.Module {
       // surface through both directions); identical inputs give
       // bit-identical scores, so the distinct is exact. Per-cell volume
       // stays ~2·cnt·cap via the sub-split, never cnt².
-      val pm = Scale.ivfProbeMap(s, d, nprobe = 2)
+      val pm = Scale.ivfProbeMap(s, d, nprobe = 2, cap)
       val lab = e.select(col("vec_id"), col("label"), col("embedding"))
       val probeSide = lab.join(pm
         .select(col("vec_id"), col("cell"), col("sub")), Seq("vec_id"))
@@ -718,7 +718,6 @@ object Dedup extends Q.Module {
     "q84_dedup_levenshtein_rule",
     "✦ naive levenshtein filter auto-rewritten to thresholded form by rule",
     (s, d) => {
-      graft.plans.ThresholdLevenshteinRule.install(s)
       // scan-level substring + harness-owned cache (see q78).
       val base = Tables.documents(s, d)
         .select(col("doc_id"), substring(col("text"), 1, 24).as("head"))
@@ -1685,7 +1684,6 @@ object Dedup extends Q.Module {
     // a transform whose lambda is now just the md5 chain: the
     // slice/concat_ws interpreted work is gone, the md5 — the
     // irreducible per-element cost — stays.
-    graft.functions.WordNgrams.register(s)
     val hs = transform(
       graft.functions.WordNgrams.wordNgrams(col("text"), 3), g =>
         conv(substring(md5(g), 1, 8), 16, 10).cast("long"))

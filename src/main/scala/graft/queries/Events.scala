@@ -2761,7 +2761,6 @@ object Events extends Q.Module {
         .withColumn("rem", pmod(lit(k) * col("wq"), col("w_total")))
       val seats = a0.agg((lit(k) - sum(col("base_quota"))).as("seats"))
       val wR = Window.orderBy(col("rem").desc, col("event_type"))
-      def fsum(c: Column) = aggregate(c, lit(0.0), (acc, x) => acc + x)
       val deff = strata.crossJoin(broadcast(tot))
         .select(col("event_type"),
           (col("n_h").cast("double") / col("n_total").cast("double"))
@@ -2984,7 +2983,6 @@ object Events extends Q.Module {
         .select((col("value").cast("decimal(18,2)") * 100).cast("long")
           .as("cents"))
         .orderBy(col("cents").desc).limit(k + 1)
-      def fsum(c: Column) = aggregate(c, lit(0.0), (acc, x) => acc + x)
       top.agg(count(lit(1)).as("n_top"),
           min(col("cents")).as("x_k1"),
           max(col("cents")).as("x_max"),

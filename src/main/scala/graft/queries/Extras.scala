@@ -941,7 +941,6 @@ object Extras extends Q.Module {
     "q276_rrf_hybrid_retrieval",
     "✦ retrieval: reciprocal-rank fusion of BM25 and embedding-cosine top-100",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val lexTop = bm25Frame(s, d, Seq("filter", "merge", "vector"))
         .orderBy(col("bm25").desc, col("doc_id")).limit(100)
       val lex = lexTop.select(col("doc_id"),

@@ -106,7 +106,7 @@ object Scale extends Q.Module {
   // cell), so fixture results are bitwise those of the uncapped form —
   // but the SQL twins still mirror the sub-split arithmetic exactly, so
   // the oracle match holds at ANY scale, overflowing or not.
-  private val ivfCellCap = 512L
+  private[graft] val ivfCellCap = 512L
 
   /** (cid, cell_cnt) for the rn=1 cell membership frame. */
   private def cellCounts(cell: DataFrame): DataFrame =
@@ -157,7 +157,6 @@ object Scale extends Q.Module {
   /** (vec_id, embedding, cid, rn): every vector ranked against the
     * trained centroid set (rn=1 = its cell; rn<=nprobe = probe set). */
   private def ivfAssigned(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
       transform(col("embedding"),
         x => floor(x.cast("double") * 64 + lit(0.5)).cast("long")).as("qe"))
@@ -209,10 +208,6 @@ object Scale extends Q.Module {
   private val ivfScaledCellTarget = 2048L
   private val ivfTrainPerCell = 64L
   private val ivfTrainFloor = 65536L
-  // Test hook (r16 advice): fixture corpora can't overflow the 512-row
-  // cell cap, so the sub-split recall regime — the one the decade runs
-  // operate in — needs a lowered cap to be exercised at spec scale.
-  @volatile private[graft] var cellCapOverride: Option[Long] = None
 
   private[graft] def scaledIvfK(n: Long): Int =
     math.max(ivfK.toLong,
@@ -233,13 +228,14 @@ object Scale extends Q.Module {
     * (vec_id, rn, cell, sub). rn = 1 rows are the (disjoint) cell
     * membership; rn <= nprobe rows are the probe fan-out. Cells are
     * disjoint and a probe only scans its own sub-cell of an overflowing
-    * cell, so per-probe candidate volume is bounded by nprobe·cellCap
+    * cell, so per-probe candidate volume is bounded by nprobe·cap
     * at ANY corpus size. The assignment frame is persisted (member and
-    * probe legs both scan it; harness-owned cache, like q74's). */
+    * probe legs both scan it; harness-owned cache, like q74's).
+    * Fixture corpora can't overflow the 512-row [[ivfCellCap]], so
+    * EmbDedupAnnSpec passes a lower `cap` to exercise the sub-split
+    * recall regime the decade runs operate in. */
   private[graft] def ivfProbeMap(s: SparkSession, d: String,
-      nprobe: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    graft.functions.TopCells.register(s)
+      nprobe: Int, cap: Long = ivfCellCap): DataFrame = {
     val n = embeddingsCount(s, d)
     val k = scaledIvfK(n)
     // Hash-repartition BEFORE the per-row-heavy kernel — row-group skew
@@ -320,8 +316,7 @@ object Scale extends Q.Module {
     // anything materialized (harness-owned cache, the q74 pattern).
     val counts = cellCounts(asn.filter(col("rn") === 1)
       .select(col("vec_id"), col("cid")))
-    subSplit(asn, counts, "vec_id",
-      cellCapOverride.getOrElse(ivfCellCap))
+    subSplit(asn, counts, "vec_id", cap)
       .select(col("vec_id"), col("rn"), col("cid").as("cell"), col("sub"))
   }
 
@@ -718,7 +713,6 @@ object Scale extends Q.Module {
     "q165_bloom_join_prune",
     "J ✦ bloom semi-join reduction: stat.bloomFilter dim keys, might_contain-prune the fact scan",
     (s, d) => {
-      graft.functions.BloomJoin.register(s)
       val dim = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT" &&
           year(col("o_orderdate")) === 1995)

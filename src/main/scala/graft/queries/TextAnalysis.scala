@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.dsl.{fpTrunc, fpTruncSql, hashMod, hashMod2L, hashMod2LSql}
+import graft.dsl.{fpTrunc, fpTruncSql, fsum, hashMod, hashMod2L, hashMod2LSql}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -241,7 +241,6 @@ object TextAnalysis extends Q.Module {
     // Fused codegen'd 8-gram kernel (r18, Dedup.shinglesWithDfOf's
     // swap): byte-identical stream, and the old size(w) >= 8 guard is
     // subsumed by the kernel's empty-array-below-n contract.
-    graft.functions.WordNgrams.register(s)
     def gids(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"),
         explode(array_distinct(
@@ -1237,8 +1236,6 @@ object TextAnalysis extends Q.Module {
       val xs = transform(col("arr"), (_, i) => log((i + 1).cast("double")))
       val ys = transform(col("arr"),
         x => log(x.getField("cnt").cast("double")))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (a, x) => a + x)
       top.agg(count(lit(1)).as("n_terms"),
           sort_array(collect_list(struct((-col("cnt")).as("nc"),
             col("word"), col("cnt")))).as("arr"))
@@ -2013,7 +2010,6 @@ object TextAnalysis extends Q.Module {
       // Fused codegen'd 3-gram kernel (r18): duplicates kept (type
       // frequencies are the point here); the old size >= 3 guard is
       // subsumed by the kernel's empty-array-below-n contract.
-      graft.functions.WordNgrams.register(s)
       val tf = docs(s, d)
         .select(explode(
           graft.functions.WordNgrams.wordNgrams(col("text"), 3))
@@ -2093,7 +2089,6 @@ object TextAnalysis extends Q.Module {
       // same per-doc ORDER the old token pos did, which is all the
       // downstream ordered fold reads from it; docs with < 2 words
       // yield no rows, exactly like the old prev-IS-NULL filter.
-      graft.functions.WordNgrams.register(s)
       val big = docs(s, d)
         .select(col("doc_id"),
           posexplode(graft.functions.WordNgrams.wordNgrams(col("text"), 2))
@@ -2182,7 +2177,6 @@ object TextAnalysis extends Q.Module {
       // Fused codegen'd 3-gram kernel (r18): duplicates kept (token
       // counts feed N(cp)); old size >= 3 guard subsumed by the
       // kernel's empty-array-below-n contract.
-      graft.functions.WordNgrams.register(s)
       val sh = docs(s, d)
         .select(col("doc_id"),
           explode(graft.functions.WordNgrams.wordNgrams(col("text"), 3))
@@ -2202,8 +2196,6 @@ object TextAnalysis extends Q.Module {
       val vCurve = firstDoc.join(broadcast(cps), col("fd") < col("cp"))
         .groupBy(col("i")).agg(count(lit(1)).as("vocab"))
       val curve = nCurve.join(vCurve, Seq("i"))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (a, x) => a + x)
       val xs = transform(col("arr"), x => log(x.getField("n_tokens").cast("double")))
       val ys = transform(col("arr"), x => log(x.getField("vocab").cast("double")))
       curve.agg(count(lit(1)).as("n_points"),
@@ -2361,8 +2353,6 @@ object TextAnalysis extends Q.Module {
         .select(col("source"),
           size(split(col("text"), " ")).cast("long").as("nt"))
         .groupBy(col("source")).agg(sum(col("nt")).as("cnt"))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (a, x) => a + x)
       masses.agg(count(lit(1)).as("n_sources"),
           sum(col("cnt")).as("n_tokens"),
           sum(col("cnt") * col("cnt")).as("hhi_num"),
@@ -2435,8 +2425,6 @@ object TextAnalysis extends Q.Module {
       val withW = cells.crossJoin(broadcast(tot))
         .withColumn("w", (col("b").cast("double") * col("n_ref"))
           / (col("a") * col("n_cur")).cast("double"))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (acc, x) => acc + x)
       val ess = withW.agg(
           array_sort(collect_list(struct(col("lang"), col("a"), col("w"))))
             .as("arr"),
@@ -2530,8 +2518,6 @@ object TextAnalysis extends Q.Module {
         .join(sc, Seq("source", "word"), "left")
         .withColumn("cp", coalesce(col("cp"), lit(0L)))
         .crossJoin(broadcast(qtot))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (acc, x) => acc + x)
       val terms = grid.select(col("source"), col("word"),
         ((col("cp") + 1).cast("double")
           / (col("cp_tot") + col("v")).cast("double")).as("p"),
@@ -2805,8 +2791,6 @@ object TextAnalysis extends Q.Module {
           explode(transform(sequence(lit(1), length(col("text")) - 1),
             i => col("text").substr(i, lit(2)))).as("bg"))
         .groupBy(col("source"), col("bg")).agg(count(lit(1)).as("c"))
-      def fsum(c: org.apache.spark.sql.Column) =
-        aggregate(c, lit(0.0), (acc, x) => acc + x)
       bg.groupBy(col("source"))
         .agg(sum(col("c")).as("n_bigrams"),
           count(lit(1)).as("n_distinct"),

@@ -31,7 +31,7 @@ class AuditAnnSpec extends SparkSuite {
   }
 
   test("ANN shortlist top-10 recall >= 0.7 vs exact on a clustered corpus") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkEntry.prepare(spark)
     val rng = new Random(7)
     val dim = 16
     val centers = Array.fill(40)(Array.fill(dim)(rng.nextDouble() * 2 - 1))

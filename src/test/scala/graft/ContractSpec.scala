@@ -62,9 +62,9 @@ class ContractSpec extends SparkSuite {
     assert(md.contains(s"$suites suites"), s"README suite count drifted from $suites")
   }
 
-  // (file name, line) for every line of src/main/scala that is not a
+  // (file path, line) for every line of src/main/scala that is not a
   // comment line
-  private lazy val mainCode: List[(String, String)] = {
+  private lazy val mainCode: List[(java.nio.file.Path, String)] = {
     import scala.jdk.CollectionConverters._
     val files = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
@@ -75,12 +75,12 @@ class ContractSpec extends SparkSuite {
       Seq("//", "*", "/*").exists(l.trim.startsWith)
     files.flatMap { f =>
       java.nio.file.Files.readAllLines(f).asScala.filterNot(isComment)
-        .map(f.getFileName.toString -> _)
+        .map(f -> _)
     }
   }
 
   private def filesWith(needle: String): Set[String] =
-    mainCode.collect { case (f, l) if l.contains(needle) => f }.toSet
+    mainCode.collect { case (f, l) if l.contains(needle) => f.getFileName.toString }.toSet
 
   // The session builder and the SPARK_GRAFT_* env reads once had a
   // hand-copy per main, and the copies drifted (the tests lacked
@@ -123,6 +123,21 @@ class ContractSpec extends SparkSuite {
   test("no planning probe: no getNumPartitions in src/main") {
     val n = "getNumPartitions"
     assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
+  }
+
+  // Query code once installed extensions itself (23 register calls and
+  // q84's rule install), q57 rebound lsh_bucket to 32 planes for every
+  // later query on the session, and spec hooks were mutable globals in
+  // query objects. SparkEntry.prepare installs GraftExtensions' one list
+  // before every registry call, and a hook is an argument.
+  test("one install list: no query registers a function or holds a @volatile global") {
+    val queries = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val found = for {
+      (f, l) <- mainCode if f.startsWith(queries)
+      n <- Seq(".register(", ".install(", "@volatile") if l.contains(n)
+    } yield s"${f.getFileName}: ${l.trim}"
+    assert(mainCode.exists(_._1.startsWith(queries)))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("oracle SQL mentions only fixture tables") {

@@ -7,8 +7,9 @@ import scala.util.Random
   * it the grid-collapsed form that never materializes the ε-graph (the
   * r17 rewrite that took sf100 from disk-death to 87 s). The regimes
   * are an execution-layout choice only — this spec pins the claim by
-  * running BOTH on one clustered 2-D corpus (the gate hook forces the
-  * grid branch) and asserting the census rows are identical, including
+  * running BOTH on one clustered 2-D corpus (the registry entry picks
+  * the direct branch, and the spec passes the grid regime to q269's
+  * body) and asserting the census rows are identical, including
   * cluster labels, roles, and counts.
   */
 class DbscanRegimeSpec extends SparkSuite {
@@ -38,21 +39,17 @@ class DbscanRegimeSpec extends SparkSuite {
         .toDF("vec_id", "embedding")
         .repartition(4).write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
-      def census(): Seq[(Long, String, Long)] = {
-        val df = SparkEntry.queries("q269_dbscan")(spark, dir)
+      def census(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Long)] = {
         val rows = df.collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
         spark.sharedState.cacheManager.clearCache()
         rows
       }
-      val direct = census()
+      val direct = census(SparkEntry.queries("q269_dbscan")(spark, dir))
       assert(direct.map(_._3).sum == pts.size, s"census misses points: $direct")
       assert(direct.exists(_._2 == "border") && direct.count(_._2 == "core") > 1,
         s"degenerate fixture (no borders or single cluster): $direct")
-      queries.Vectors.dbscanForceGrid = true
-      val grid = try census() finally {
-        queries.Vectors.dbscanForceGrid = false
-      }
+      val grid = census(queries.Vectors.dbscan(spark, dir, grid = true))
       assert(grid == direct,
         s"regimes disagree:\n direct=$direct\n grid=$grid")
     } finally {

@@ -55,13 +55,14 @@ class EmbDedupAnnSpec extends SparkSuite {
     }
   }
 
-  /** Assert every ANN pair is an exact pair with the identical score;
-    * return the recall. */
-  private def subsetRecall(dir: String): Double = {
+  /** Assert every ANN pair (IVF cell cap `cap`) is an exact pair with
+    * the identical score; return the recall. */
+  private def subsetRecall(dir: String,
+      cap: Long = graft.queries.Scale.ivfCellCap): Double = {
     val exact = graft.queries.Dedup.embCosinePairs(spark, dir,
       forceAnn = Some(false)).collect()
     val ann = graft.queries.Dedup.embCosinePairs(spark, dir,
-      forceAnn = Some(true)).collect()
+      forceAnn = Some(true), cap = cap).collect()
     val exactByPair = exact.map { r =>
       (r.getLong(1), r.getLong(2)) -> r.getDouble(3)
     }.toMap
@@ -77,7 +78,7 @@ class EmbDedupAnnSpec extends SparkSuite {
   }
 
   test("q50 ANN mode: subset of exact with identical scores, recall >= 0.8 on clusters") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkEntry.prepare(spark)
     withClusteredCorpus { dir =>
       val recall = subsetRecall(dir)
       info(f"q50 ANN recall $recall%.3f")
@@ -86,18 +87,17 @@ class EmbDedupAnnSpec extends SparkSuite {
   }
 
   test("q50 ANN sub-split regime: overflowing cells stay a subset with bounded recall loss") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkEntry.prepare(spark)
     withClusteredCorpus { dir =>
       // Cap far below the ~50-row cluster cells so the sub-split is the
       // rule, not the exception — the regime a 512-cap hits at decade
       // scale with multi-thousand-row cells.
-      graft.queries.Scale.cellCapOverride = Some(16L)
       try {
-        val pm = graft.queries.Scale.ivfProbeMap(spark, dir, nprobe = 2)
+        val pm = graft.queries.Scale.ivfProbeMap(spark, dir, nprobe = 2, cap = 16)
         val split = pm.filter(col("sub") > 0).count()
         assert(split > 0,
-          "cap override did not trigger the sub-split — regime untested")
-        val recall = subsetRecall(dir)
+          "cap 16 did not trigger the sub-split — regime untested")
+        val recall = subsetRecall(dir, cap = 16)
         info(f"q50 ANN sub-split recall $recall%.3f ($split split rows)")
         // Floor, not target: straddling pairs are the documented trade.
         // Measured 0.401 on this corpus at cap 16/nprobe 2; 0.3 is the
@@ -105,7 +105,6 @@ class EmbDedupAnnSpec extends SparkSuite {
         // sub assignment (e.g. probe/member hashed differently) gives.
         assert(recall >= 0.3, s"sub-split recall $recall collapsed below 0.3")
       } finally {
-        graft.queries.Scale.cellCapOverride = None
         spark.catalog.clearCache()
       }
     }
@@ -114,6 +113,7 @@ class EmbDedupAnnSpec extends SparkSuite {
   test("fixture scale defaults to the exact path (oracle bit-compat)") {
     // At <= 10k vectors the auto gate must pick the exact all-pairs
     // scan: identical rows to the explicit exact mode on the fixture.
+    SparkEntry.prepare(spark)
     val auto = graft.queries.Dedup.embCosinePairs(spark, sfDir).collect()
     val exact = graft.queries.Dedup.embCosinePairs(spark, sfDir,
       forceAnn = Some(false)).collect()

@@ -46,7 +46,7 @@ class PairPayloadPlanSpec extends SparkSuite {
   }
 
   test("q50 ANN leg: no shuffle carries two embedding payloads") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkEntry.prepare(spark)
     val worst = maxPayloadPerShuffle(
       graft.queries.Dedup.embCosinePairs(spark, sfDir, forceAnn = Some(true)))
     assert(worst <= 1, s"a shuffle exchange carries $worst vector payloads " +
