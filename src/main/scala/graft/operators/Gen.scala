@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Generation management for iterative DataFrame operators (CC, KCore,
-  * PageRank, [[MinPlus]], the Lloyd loops): every generation is cut with
+  * PageRank, [[MinPlus]], [[Lloyd]]): every generation is cut with
   * `localCheckpoint` and the superseded one is released through
   * [[release]].
   *

@@ -101,22 +101,13 @@ object GramPCA {
     * checked surface always takes the (bit-deterministic) driver path. */
   val DriverDimsMax = 128
 
-  /** Which path the last [[topK]] call took ("driver"/"distributed") —
-    * a test observation point for the threshold switch. */
-  @volatile private[graft] var lastPath: String = ""
-
   /** Convenience composition: top-k principal components of `embCol`
     * straight from the frame. Dispatches on dims — see
     * [[DriverDimsMax]]. */
   def topK(emb: DataFrame, embCol: String, dims: Int, k: Int,
       iters: Int = 16): Seq[(Array[Double], Double)] =
-    if (dims <= DriverDimsMax) {
-      lastPath = "driver"
-      deflateTopK(gramUnits(emb, embCol, dims), k, iters)
-    } else {
-      lastPath = "distributed"
-      distributedTopK(emb, embCol, dims, k, iters)
-    }
+    if (dims <= DriverDimsMax) deflateTopK(gramUnits(emb, embCol, dims), k, iters)
+    else distributedTopK(emb, embCol, dims, k, iters)
 
   /** Wide-dims path: the Gram matrix stays a persisted (j, k, g) frame
     * on the cluster; each power step is ONE map-side-combined aggregate

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * queries — the co-purchase pair graph (q182/q194/q225/q231 each
   * rebuilt it from scratch: 4× a 2.82M-pair build per sf10 registry
   * run) and the k-means model (q214/q286/q317 each re-trained the same
-  * 3-round Lloyd loop). One build per fixture dir, held as eager
+  * 3 [[Lloyd]] rounds). One build per fixture dir, held as eager
   * `localCheckpoint` frames: RDD-level block caches that a
   * `spark.catalog.clearCache()` between queries (Verify/Bench both do
   * it) does NOT release, unlike `Dataset.persist`, so the memo survives

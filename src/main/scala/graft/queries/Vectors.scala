@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.dsl.{cosineSql, dotSql, fsum, norm2Sql}
+import graft.operators.Lloyd
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1017,11 +1018,14 @@ object Vectors extends Q.Module {
         * SQRT(CAST(qnb AS DOUBLE)))) * 1e6) / 1e6 AS cos_t
     FROM pairs ORDER BY label_a, label_b"""))
 
-  /** (long-format units, final centroids, final assignment) after the
-    * 3-round integer-exact Lloyd loop of q214 — factored out so q286's
-    * agreement audit scores the IDENTICAL assignment (one body, one
-    * arithmetic; q214's hash is unchanged). See q214's comment for the
-    * integer-unit determinism rules and the per-round plan shape. */
+  /** q214's k and its number of Lloyd rounds. */
+  private val KmeansK = 4
+  private val KmeansRounds = 3
+
+  /** (long-format units, final centroids, final assignment) after
+    * q214's [[Lloyd]] rounds, memoized so q286's
+    * agreement audit and q317's margins score the IDENTICAL model (one
+    * body, one arithmetic; q214's hash is unchanged). */
   private def kmeansLloyd(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) =
     graft.operators.Memo.cached[(DataFrame, DataFrame, DataFrame)](
@@ -1031,77 +1035,30 @@ object Vectors extends Q.Module {
     * measured q286 regressing on untouched code because q214/q286/q317
     * each re-trained this identical model — now it trains once per
     * fixture dir ([[graft.operators.Memo]]), held as localCheckpoints
-    * that survive the harness's per-query clearCache. `ve` moves from
-    * `persist()` (CacheManager entry — cleared between queries, so a
-    * memoized frame over it would silently recompute cold) to an eager
-    * localCheckpoint for the same reason. Intermediate generations
-    * (c0..c2, a1..a2) are released the moment their successor is
-    * materialized — the PageRank exit rule — instead of lingering for
-    * the JVM's lifetime. The loop is integer-exact deterministic, so
-    * the memoized triple is bit-identical to a per-query rebuild. */
+    * that survive the harness's per-query clearCache. Intermediate
+    * generations are released the moment their successor is
+    * materialized. The loop is integer-exact deterministic, so the
+    * memoized triple is bit-identical to a per-query rebuild. */
   private def kmeansLloydBuild(s: SparkSession, d: String)
       : ((DataFrame, DataFrame, DataFrame), Seq[DataFrame]) = {
-    // Keyed repartition by vec_id (r19; was round-robin fanOut in r18):
-    // assign's two aggregates and update's join ALL key on vec_id, so
-    // one hash exchange makes HashPartitioning(vec_id) satisfy every
-    // in-loop ClusteredDistribution (subset rule) and the per-round
-    // exchanges vanish — see q277's comment for the full argument. The
-    // r18 round-robin left RoundRobinPartitioning and every pass
-    // re-shuffled (q317's c32 0.27→0.57 s regression, VERDICT item 3).
-    //
     // TWO handles on the same frame, deliberately: `veLoop` is a persist
-    // of the LIVE plan — its exchange stays visible to the planner, so
-    // the loop's passes are exchange-free (a localCheckpoint would
-    // erase the partitioning: its LogicalRDD reports
-    // UnknownPartitioning under AQE — measured in the r19 q317 dump,
-    // pinned by PlanEvidenceSpec).
+    // of the LIVE plan — its vec_id exchange stays visible to the
+    // planner, so the loop's passes are exchange-free (a localCheckpoint
+    // would erase the partitioning: its LogicalRDD reports
+    // UnknownPartitioning under AQE, pinned by PlanEvidenceSpec).
     // `ve`, the MEMOIZED handle, is the localCheckpoint of that cache:
     // Memo outlives the harness's per-query clearCache, which would
     // empty a CacheManager persist and silently recompute (the r14
     // lesson recorded above).
     val scan = Tables.embeddings(s, d)
-    val veLoop = scan
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding"))
-        .as(Seq("dim", "x")))
-      .select(col("vec_id"), col("dim").cast("long").as("dim"),
-        floor(col("x").cast("double") * 1e6).as("xu"))
-      .persist()
+    val veLoop = Lloyd.units(scan).persist()
     val ve = veLoop.localCheckpoint(true) // also warms veLoop's cache
-    def assign(cent: DataFrame) =
-      veLoop.join(broadcast(cent), Seq("dim"))
-        .withColumn("dd",
-          (col("xu") - col("cu")) * (col("xu") - col("cu")))
-        .groupBy(col("vec_id"), col("cid")).agg(sum(col("dd")).as("d2"))
-        .groupBy(col("vec_id"))
-        .agg(min(col("d2") * 8 + col("cid")).as("key"))
-        .select(col("vec_id"), pmod(col("key"), lit(8L)).as("cid"))
-    def update(asg: DataFrame) =
-      veLoop.join(asg, Seq("vec_id"))
-        .groupBy(col("cid"), col("dim"))
-        .agg(sum(col("xu")).as("ss"), count(lit(1)).as("n"))
-        .select(col("cid"), col("dim"),
-          floor(col("ss").cast("double") / col("n").cast("double"))
-            .as("cu"))
-    val c0 = veLoop.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("dim"), col("xu").as("cu"))
-      .localCheckpoint(true)
-    var cent = c0
-    // Rounds 1-2 fuse assign+update into ONE materializing checkpoint
-    // per round (the r18 q277 rule: an assignment consumed exactly once
-    // buys nothing from its own checkpoint — only a scheduling
-    // round-trip). Round 3's assignment IS the memoized asg, so it
-    // keeps its eager cut; c3 = update(a3) still ends the loop.
-    for (_ <- 1 to 2) {
-      val next = update(assign(cent)).localCheckpoint(true)
-      // The incoming centroids (c0, c1) are dead once `next` is
-      // materialized.
-      graft.operators.Gen.release(cent)
-      cent = next
-    }
-    val asg = assign(cent).localCheckpoint(true)
-    graft.operators.Gen.release(cent)
-    cent = update(asg).localCheckpoint(true)
+    // The last round's assignment IS the memoized asg, so it keeps its
+    // own eager cut; c3 = update(a3) ends the loop.
+    val prev = Lloyd.rounds(veLoop, Nil, KmeansK, KmeansRounds - 1)
+    val asg = Lloyd.assign(veLoop, prev, Nil, KmeansK).localCheckpoint(true)
+    graft.operators.Gen.release(prev)
+    val cent = Lloyd.update(veLoop, asg, Nil).localCheckpoint(true)
     // The loop is done: the memoized triple survives on its own
     // checkpoints; the live-plan cache can go (the harness clearCache
     // would reclaim it between queries anyway).
@@ -1122,24 +1079,17 @@ object Vectors extends Q.Module {
 
   // --- q214: DISTRIBUTED K-MEANS (Lloyd, k=4, 3 iterations) — the
   //     clustering workhorse behind IVF cell training (q74) and SemDeDup
-  //     (q109), here as a first-class oracle-gated operator. Every step
-  //     is engine-exact: coordinates quantize ONCE to integer 1e-6 units
-  //     (FLOOR of the same float→double product — the q167 integer-unit
-  //     rule), distances are exact integer Σ(x−c)² sums, argmin uses the
-  //     composite d²·8+cid key (min of one BIGINT — the deterministic
-  //     tie rule: lower cid wins equal distances), and the centroid
-  //     update re-quantizes via FLOOR(sum/count) — one double division
-  //     of exact integers, engine-identical — so iteration 3's centroids
-  //     cannot drift between engines (floating centroids would be the
-  //     q167 DECIMAL-cast trap at every generation). Init is data-
-  //     deterministic (vec_id 0..3). Shape at 100 TB: per iteration ONE
-  //     broadcast of the k×64 centroid frame against the persisted
-  //     long-format corpus, one map-combined (vec, cid) distance
-  //     aggregate, one (cid, dim) centroid aggregate; centroid frames
-  //     are localCheckpoint-truncated so the 3-deep lazy chain is not
-  //     re-executed per action (the PageRank lineage lesson). The
-  //     oracle unrolls the identical 3 iterations as CTEs (the q194
-  //     unrolled-chain idiom).
+  //     (q109), here as a first-class oracle-gated operator, trained by
+  //     graft.operators.Lloyd: coordinates quantize ONCE to integer 1e-6
+  //     units (the q167 integer-unit rule), distances are exact integer
+  //     Σ(x−c)² sums, argmin uses the composite d²·k+cid key (lower cid
+  //     wins equal distances), and the update re-quantizes via
+  //     FLOOR(sum/count), so iteration 3's centroids cannot drift
+  //     between engines (floating centroids would be the q167
+  //     DECIMAL-cast trap at every generation). Init is data-
+  //     deterministic (vec_id 0..3). The oracle unrolls the identical 3
+  //     iterations as CTEs (Lloyd.twinSql, the q194 unrolled-chain
+  //     idiom).
   private val q214 = Q(
     "q214_kmeans",
     "✦ ML: distributed k-means (k=4, 3 Lloyd iterations), integer-quantized exact arithmetic",
@@ -1150,32 +1100,11 @@ object Vectors extends Q.Module {
         .select(col("cid"), col("dim"), col("cu"), col("n_members"))
         .orderBy(col("cid"), col("dim"))
     },
-    Some {
-      def a(i: Int, c: String) = s"""a$i AS (
-        SELECT vec_id, CAST(MIN(d2 * 8 + cid) % 8 AS BIGINT) AS cid FROM (
-          SELECT ve.vec_id, c.cid,
-            CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) AS BIGINT) AS d2
-          FROM ve JOIN $c c ON ve.dim = c.dim GROUP BY 1, 2)
-        GROUP BY 1)"""
-      def u(i: Int) = s"""c$i AS (
-        SELECT a.cid, ve.dim,
-          CAST(FLOOR(CAST(SUM(ve.xu) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cu
-        FROM ve JOIN a$i a ON ve.vec_id = a.vec_id GROUP BY 1, 2)"""
-      s"""WITH ve AS (
-        SELECT vec_id, g.i AS dim,
-          CAST(FLOOR(CAST(embedding[g.i + 1] AS DOUBLE) * 1e6) AS BIGINT)
-            AS xu
-        FROM embeddings,
-          (SELECT unnest(generate_series(0, 63)) AS i) g),
-      c0 AS (SELECT vec_id AS cid, dim, xu AS cu FROM ve WHERE vec_id < 4),
-      ${a(1, "c0")}, ${u(1)},
-      ${a(2, "c1")}, ${u(2)},
-      ${a(3, "c2")}, ${u(3)},
+    Some(s"""WITH ${Lloyd.twinSql(Nil, KmeansK, KmeansRounds)},
       s AS (SELECT cid, COUNT(*) AS n_members FROM a3 GROUP BY 1)
       SELECT c3.cid AS cid, c3.dim AS dim, c3.cu AS cu, s.n_members
       FROM c3 JOIN s ON c3.cid = s.cid
-      ORDER BY cid, dim"""
-    })
+      ORDER BY cid, dim"""))
 
   // --- q215: DETERMINISTIC NEGATIVE SAMPLING — the contrastive-training
   //     data op: pick 2 cross-label negatives per anchor with NO rand()
@@ -1520,11 +1449,9 @@ object Vectors extends Q.Module {
   //     to a top-15 (the two-stage retrieve-then-rerank every PQ
   //     deployment runs; shortlist recall@15 = 0.93 on the fixture,
   //     pinned in PqSpec).
-  //     Every step is engine-exact: coordinates quantize ONCE to 1e-6
-  //     integer units, sub-distances are exact integer Σ(x−c)², argmin
-  //     is min of one composite d²·8+cid BIGINT (lower cid wins ties),
-  //     centroid update is FLOOR(sum/count) — so codes, LUT, and ADC
-  //     sums are all integers and cannot drift between engines.
+  //     Every step is engine-exact (graft.operators.Lloyd, keyed by
+  //     `sub`): codes, LUT, and ADC sums are all integers and cannot
+  //     drift between engines.
   //     Scale shape: training is q214's loop per subspace run as ONE
   //     joint plan (centroid id = (sub, cid); the codebook frame is
   //     m·k·(dims/m) = 1,024 rows — always broadcast); encoding is one
@@ -1539,70 +1466,20 @@ object Vectors extends Q.Module {
     "q277_product_quantization",
     "✦ ANN: product quantization — 8×(k=16) codebooks, integer Lloyd, ADC shortlist-60 + exact re-rank top-15",
     (s, d) => {
-      // Keyed repartition by vec_id (r19; was round-robin fanOut in
-      // r18): every downstream pass groups or joins on vec_id — the 4
-      // assign passes (groupBy(vec_id, sub, cid) then (vec_id, sub)),
-      // the update join (vec_id, sub), the ADC aggregate (vec_id), and
-      // the exact-d² audit (vec_id) — so ONE hash exchange here makes
-      // the persisted frame's HashPartitioning(vec_id) satisfy all of
-      // them (ClusteredDistribution subset rule) and the per-round
-      // exchanges disappear from the plan. Round-robin spread the same
-      // rows but left RoundRobinPartitioning, so every one of those
-      // aggregates re-shuffled the long-format corpus: at fixture SF
-      // that was ~2 extra AQE shuffle jobs per assign (the r18 c32
-      // 3.16→9.58 s regression, VERDICT item 1); at 100 TB each was a
-      // full corpus shuffle per Lloyd round. Width = the session core
-      // dial (REPARTITION_BY_NUM, AQE-coalesce-exempt — the q228 rule),
-      // never a constant.
-      val ve = Tables.embeddings(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-        .select(col("vec_id"), posexplode(col("embedding"))
-          .as(Seq("dim", "x")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          floor(col("x").cast("double") * 1e6).as("xu"))
+      // Every downstream pass — the Lloyd rounds, the encode, the ADC
+      // aggregate and the exact-d² audit — groups or joins on vec_id,
+      // so the vec_id-partitioned persist (Lloyd.units) serves them all
+      // without an exchange. ve persist: harness-owned cache (q47's rule
+      // — Verify/Bench clearCache after each query).
+      val ve = Lloyd.units(Tables.embeddings(s, d))
         .withColumn("sub", floor(col("dim") / lit(8L)))
         .persist()
-      // ve persist: harness-owned cache (q47's rule — Verify/Bench
-      // clearCache after each query); consumed by every Lloyd round,
-      // the encode pass, the LUT, and the exact-d² audit leg.
-      def assign(cent: org.apache.spark.sql.DataFrame) =
-        ve.join(broadcast(cent), Seq("sub", "dim"))
-          .withColumn("dd",
-            (col("xu") - col("cu")) * (col("xu") - col("cu")))
-          .groupBy(col("vec_id"), col("sub"), col("cid"))
-          .agg(sum(col("dd")).as("d2"))
-          .groupBy(col("vec_id"), col("sub"))
-          .agg(min(col("d2") * 16 + col("cid")).as("key"))
-          .select(col("vec_id"), col("sub"),
-            pmod(col("key"), lit(16L)).as("cid"))
-      def update(asg: org.apache.spark.sql.DataFrame) =
-        ve.join(asg, Seq("vec_id", "sub"))
-          .groupBy(col("sub"), col("cid"), col("dim"))
-          .agg(sum(col("xu")).as("ss"), count(lit(1)).as("n"))
-          .select(col("sub"), col("cid"), col("dim"),
-            floor(col("ss").cast("double") / col("n").cast("double"))
-              .as("cu"))
-      // Init is data-deterministic: vec 0..15's subvectors seed the 16
-      // centroids of each subspace (cid = vec_id, matching k = 16).
-      var cent = ve.filter(col("vec_id") < 16)
-        .select(col("sub"), col("vec_id").as("cid"), col("dim"),
-          col("xu").as("cu"))
-        .localCheckpoint(true)
-      // One checkpoint per Lloyd round (r18): asg is consumed exactly
-      // once (by update), so materializing it bought no reuse — only a
-      // whole extra job's scheduling latency per round. cent keeps its
-      // eager cut: it is the BROADCAST side of the next round's assign,
-      // and a lazy broadcast subtree re-executes the entire chain
-      // (PageRank scaladoc has the same rule). The incoming centroids
-      // are dead once their successor is materialized.
-      for (_ <- 1 to 3) {
-        val next = update(assign(cent)).localCheckpoint(true)
-        graft.operators.Gen.release(cent)
-        cent = next
-      }
+      // Init: vec 0..15's subvectors seed the 16 centroids of each
+      // subspace.
+      val cent = Lloyd.rounds(ve, Seq("sub"), 16, 3)
       // Encode the corpus against the TRAINED codebook (iteration 3's),
       // the same pass a production encoder ships.
-      val codes = assign(cent)
+      val codes = Lloyd.assign(ve, cent, Seq("sub"), 16)
       val q = ve.filter(col("vec_id") === 7)
         .select(col("sub"), col("dim"), col("xu").as("qu"))
       val lut = cent.join(broadcast(q), Seq("sub", "dim"))
@@ -1624,32 +1501,7 @@ object Vectors extends Q.Module {
       exact.select(col("vec_id"), col("adc_d2"), col("exact_d2"))
         .orderBy(col("exact_d2"), col("vec_id")).limit(15)
     },
-    Some {
-      def a(i: Int, c: String) = s"""a$i AS (
-        SELECT vec_id, sub, CAST(MIN(d2 * 16 + cid) % 16 AS BIGINT) AS cid
-        FROM (
-          SELECT ve.vec_id, ve.sub, c.cid,
-            CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) AS BIGINT) AS d2
-          FROM ve JOIN $c c ON ve.sub = c.sub AND ve.dim = c.dim
-          GROUP BY 1, 2, 3)
-        GROUP BY 1, 2)"""
-      def u(i: Int) = s"""c$i AS (
-        SELECT a.sub, a.cid, ve.dim,
-          CAST(FLOOR(CAST(SUM(ve.xu) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cu
-        FROM ve JOIN a$i a ON ve.vec_id = a.vec_id AND ve.sub = a.sub
-        GROUP BY 1, 2, 3)"""
-      s"""WITH ve AS (
-        SELECT vec_id, g.i AS dim, g.i // 8 AS sub,
-          CAST(FLOOR(CAST(embedding[g.i + 1] AS DOUBLE) * 1e6) AS BIGINT)
-            AS xu
-        FROM embeddings,
-          (SELECT unnest(generate_series(0, 63)) AS i) g),
-      c0 AS (SELECT sub, vec_id AS cid, dim, xu AS cu FROM ve
-        WHERE vec_id < 16),
-      ${a(1, "c0")}, ${u(1)},
-      ${a(2, "c1")}, ${u(2)},
-      ${a(3, "c2")}, ${u(3)},
-      ${a(4, "c3")},
+    Some(s"""WITH ${Lloyd.twinSql(Seq("sub" -> "dim // 8"), 16, 3)},
       q AS (SELECT sub, dim, xu AS qu FROM ve WHERE vec_id = 7),
       lut AS (SELECT c.sub, c.cid,
           CAST(SUM((q.qu - c.cu) * (q.qu - c.cu)) AS BIGINT) AS qd2
@@ -1666,13 +1518,12 @@ object Vectors extends Q.Module {
         JOIN q ON ve.sub = q.sub AND ve.dim = q.dim
         GROUP BY 1, 2)
       SELECT vec_id, adc_d2, exact_d2 FROM ex
-      ORDER BY exact_d2, vec_id LIMIT 15"""
-    })
+      ORDER BY exact_d2, vec_id LIMIT 15"""))
 
   // --- q286: CLUSTER-AGREEMENT AUDIT (adjusted Rand index + purity) —
   //     "do the discovered clusters recover the known classes?": score
-  //     q214's k-means assignment (the IDENTICAL assignment — shared
-  //     kmeansLloyd body) against the embeddings' ground-truth labels.
+  //     q214's k-means assignment (the IDENTICAL memoized assignment,
+  //     kmeansLloyd) against the embeddings' ground-truth labels.
   //     Everything reduces to the CONTINGENCY TABLE n_ij (label ×
   //     cluster co-occurrence counts — a #labels·#clusters-row frame,
   //     the audit's only corpus-sized pass is the one count
@@ -1718,27 +1569,7 @@ object Vectors extends Q.Module {
                 - col("sum_a") * col("sum_b") * 2).cast("double"), 9)
             .as("ari"))
     },
-    Some {
-      def a(i: Int, c: String) = s"""a$i AS (
-        SELECT vec_id, CAST(MIN(d2 * 8 + cid) % 8 AS BIGINT) AS cid FROM (
-          SELECT ve.vec_id, c.cid,
-            CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) AS BIGINT) AS d2
-          FROM ve JOIN $c c ON ve.dim = c.dim GROUP BY 1, 2)
-        GROUP BY 1)"""
-      def u(i: Int) = s"""c$i AS (
-        SELECT a.cid, ve.dim,
-          CAST(FLOOR(CAST(SUM(ve.xu) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cu
-        FROM ve JOIN a$i a ON ve.vec_id = a.vec_id GROUP BY 1, 2)"""
-      s"""WITH ve AS (
-        SELECT vec_id, g.i AS dim,
-          CAST(FLOOR(CAST(embedding[g.i + 1] AS DOUBLE) * 1e6) AS BIGINT)
-            AS xu
-        FROM embeddings,
-          (SELECT unnest(generate_series(0, 63)) AS i) g),
-      c0 AS (SELECT vec_id AS cid, dim, xu AS cu FROM ve WHERE vec_id < 4),
-      ${a(1, "c0")}, ${u(1)},
-      ${a(2, "c1")}, ${u(2)},
-      ${a(3, "c2")},
+    Some(s"""WITH ${Lloyd.twinSql(Nil, KmeansK, KmeansRounds)},
       ct AS (SELECT CAST(e.label AS BIGINT) AS label, a.cid,
           CAST(COUNT(*) AS BIGINT) AS nij
         FROM a3 a JOIN embeddings e ON a.vec_id = e.vec_id
@@ -1763,8 +1594,7 @@ object Vectors extends Q.Module {
           "CAST(((n * (n - 1)) // 2) * sum_ij * 2 - sum_a * sum_b * 2" +
             " AS DOUBLE) / CAST(((n * (n - 1)) // 2) * (sum_a + sum_b)" +
             " - sum_a * sum_b * 2 AS DOUBLE)", 9)} AS ari
-      FROM cells, rws, cls, pur"""
-    })
+      FROM cells, rws, cls, pur"""))
 
   // --- q287: kNN LABEL-AGREEMENT AUDIT (label-noise detection) — the
   //     confident-learning-style screen run before training a classifier
@@ -2201,12 +2031,12 @@ object Vectors extends Q.Module {
   //     where to SPEND a labeling budget: the vectors most ambiguous
   //     under the current model, measured as the margin between the
   //     best and second-best k-means cluster distances (q214's
-  //     IDENTICAL model — shared kmeansLloyd body, so the audit scores
-  //     the clustering that actually shipped). Everything stays in
-  //     q214's integer units: both mins come from the SAME composite
-  //     d²·8+cid key (the second-best is the min key strictly above
-  //     the best — deterministic even under distance ties), the margin
-  //     is an exact BIGINT difference of d² values, and the pick is a
+  //     IDENTICAL memoized model, so the audit scores the clustering
+  //     that actually shipped). Everything stays in q214's integer
+  //     units: both mins come from the SAME composite d²·k+cid key
+  //     (Lloyd.keys; the second-best is the min key strictly above the
+  //     best — deterministic even under distance ties), the margin is
+  //     an exact BIGINT difference of d² values, and the pick is a
   //     TakeOrderedAndProject bottom-20 (map-side top-k, never a
   //     global sort).
   private val q317 = Q(
@@ -2214,17 +2044,13 @@ object Vectors extends Q.Module {
     "✦ active learning: 20 most ambiguous vectors by best-vs-second centroid margin",
     (s, d) => {
       val (ve, cent, _) = kmeansLloyd(s, d)
-      val keys = ve.join(broadcast(cent), Seq("dim"))
-        .withColumn("dd",
-          (col("xu") - col("cu")) * (col("xu") - col("cu")))
-        .groupBy(col("vec_id"), col("cid")).agg(sum(col("dd")).as("d2"))
-        .select(col("vec_id"), (col("d2") * 8 + col("cid")).as("key"))
+      val keys = Lloyd.keys(ve, cent, Nil, KmeansK)
       // One sorted-keys aggregate instead of the old m1 (min) + self-join
       // + m2 (min above the min) pair (r19): the join form re-computed
       // the WHOLE ve⋈cent⋈aggregate subtree on both sides (the memoized
       // ve checkpoint reports UnknownPartitioning, so each side also
       // paid its own exchanges — 4 in the r19 before-dump). Keys are
-      // distinct within a vec_id (the composite d²·8+cid embeds the
+      // distinct within a vec_id (the composite d²·k+cid embeds the
       // distinct cid), so the two smallest sorted keys ARE m1's min and
       // m2's strictly-greater min — bit-identical, and vec_ids with a
       // single key row drop exactly like the old inner join dropped
@@ -2236,36 +2062,16 @@ object Vectors extends Q.Module {
           get(col("ks"), lit(1)).as("k2"))
         .filter(col("k2").isNotNull)
       m2.select(col("vec_id"),
-          pmod(col("k1"), lit(8L)).as("cid"),
-          expr("k1 div 8").as("d2_best"),
-          expr("k2 div 8").as("d2_second"),
-          (expr("k2 div 8") - expr("k1 div 8")).as("margin"))
+          pmod(col("k1"), lit(KmeansK.toLong)).as("cid"),
+          expr(s"k1 div $KmeansK").as("d2_best"),
+          expr(s"k2 div $KmeansK").as("d2_second"),
+          (expr(s"k2 div $KmeansK") - expr(s"k1 div $KmeansK")).as("margin"))
         .orderBy(col("margin"), col("vec_id"))
         .limit(20)
     },
-    Some {
-      def a(i: Int, c: String) = s"""a$i AS (
-        SELECT vec_id, CAST(MIN(d2 * 8 + cid) % 8 AS BIGINT) AS cid FROM (
-          SELECT ve.vec_id, c.cid,
-            CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) AS BIGINT) AS d2
-          FROM ve JOIN $c c ON ve.dim = c.dim GROUP BY 1, 2)
-        GROUP BY 1)"""
-      def u(i: Int) = s"""c$i AS (
-        SELECT a.cid, ve.dim,
-          CAST(FLOOR(CAST(SUM(ve.xu) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cu
-        FROM ve JOIN a$i a ON ve.vec_id = a.vec_id GROUP BY 1, 2)"""
-      s"""WITH ve AS (
-        SELECT vec_id, g.i AS dim,
-          CAST(FLOOR(CAST(embedding[g.i + 1] AS DOUBLE) * 1e6) AS BIGINT)
-            AS xu
-        FROM embeddings,
-          (SELECT unnest(generate_series(0, 63)) AS i) g),
-      c0 AS (SELECT vec_id AS cid, dim, xu AS cu FROM ve WHERE vec_id < 4),
-      ${a(1, "c0")}, ${u(1)},
-      ${a(2, "c1")}, ${u(2)},
-      ${a(3, "c2")}, ${u(3)},
+    Some(s"""WITH ${Lloyd.twinSql(Nil, KmeansK, KmeansRounds)},
       keys AS (SELECT ve.vec_id,
-          CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) * 8 + c.cid AS BIGINT)
+          CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) * $KmeansK + c.cid AS BIGINT)
             AS key
         FROM ve JOIN c3 c ON ve.dim = c.dim
         GROUP BY ve.vec_id, c.cid),
@@ -2273,12 +2079,11 @@ object Vectors extends Q.Module {
       m2 AS (SELECT k.vec_id, m1.k1, MIN(k.key) AS k2
         FROM keys k JOIN m1 ON k.vec_id = m1.vec_id
         WHERE k.key > m1.k1 GROUP BY 1, 2)
-      SELECT vec_id, CAST(k1 % 8 AS BIGINT) AS cid,
-        CAST(k1 // 8 AS BIGINT) AS d2_best,
-        CAST(k2 // 8 AS BIGINT) AS d2_second,
-        CAST(k2 // 8 - k1 // 8 AS BIGINT) AS margin
-      FROM m2 ORDER BY margin, vec_id LIMIT 20"""
-    })
+      SELECT vec_id, CAST(k1 % $KmeansK AS BIGINT) AS cid,
+        CAST(k1 // $KmeansK AS BIGINT) AS d2_best,
+        CAST(k2 // $KmeansK AS BIGINT) AS d2_second,
+        CAST(k2 // $KmeansK - k1 // $KmeansK AS BIGINT) AS margin
+      FROM m2 ORDER BY margin, vec_id LIMIT 20"""))
 
   // --- q320: kNN HUBNESS AUDIT — the curse-of-dimensionality
   //     diagnostic for every retrieval path here (q44/q57/q74/q277):

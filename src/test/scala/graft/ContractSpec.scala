@@ -140,6 +140,28 @@ class ContractSpec extends SparkSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  // GramPCA once kept a @volatile global that every topK call wrote, only
+  // so a spec could see which path ran; a spec counts the path's jobs.
+  test("no @volatile global anywhere in src/main") {
+    val n = "@volatile"
+    assert(filesWith(n).isEmpty, s"$n found in ${filesWith(n)}")
+  }
+
+  // The integer Lloyd loop was written out twice in Spark (q214's memo
+  // and q277) and four times as DuckDB CTEs (q214, q286, q317, q277).
+  // operators.Lloyd holds the one body and its one twin generator.
+  test("the Lloyd arithmetic is written once per engine") {
+    val twin = "MIN(d2 *"
+    assert(filesWith(twin) == Set("Lloyd.scala"),
+      s"$twin found in ${filesWith(twin)}")
+    val queries = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val found = for {
+      (f, l) <- mainCode if f.startsWith(queries)
+      n <- Seq("def assign(", "def update(") if l.contains(n)
+    } yield s"${f.getFileName}: ${l.trim}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("oracle SQL mentions only fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

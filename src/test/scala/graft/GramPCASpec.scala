@@ -96,9 +96,14 @@ class GramPCASpec extends SparkSuite {
     }
     val df = rows.toDF("embedding")
     assert(dims > graft.operators.GramPCA.DriverDimsMax)
-    val dist = graft.operators.GramPCA.topK(df, "embedding", dims, 2)
-    assert(graft.operators.GramPCA.lastPath == "distributed",
-      "256 dims routed through the driver-matrix collect")
+    // The distributed path runs at least one matvec job per power step
+    // (k·iters = 32); the driver path collects the Gram once.
+    var dist: Seq[(Array[Double], Double)] = Nil
+    val jobs = jobsDuring {
+      dist = graft.operators.GramPCA.topK(df, "embedding", dims, 2)
+    }
+    assert(jobs >= 2 * 16,
+      s"256 dims ran $jobs jobs: routed through the driver-matrix collect")
     val driver = graft.operators.GramPCA.deflateTopK(
       graft.operators.GramPCA.gramUnits(df, "embedding", dims), 2)
     dist.zip(driver).zipWithIndex.foreach { case (((vd, ld), (vv, lv)), i) =>
@@ -113,8 +118,13 @@ class GramPCASpec extends SparkSuite {
   }
 
   test("fixture top-5 (q274's k): lambdas near-sorted, components near-orthogonal") {
-    val comps = graft.operators.GramPCA.topK(
-      Tables.embeddings(spark, sfDir), "embedding", 64, 5)
+    // 64 dims take the driver path: one Gram collect, no matvec jobs.
+    val emb = Tables.embeddings(spark, sfDir)
+    var comps: Seq[(Array[Double], Double)] = Nil
+    val jobs = jobsDuring {
+      comps = graft.operators.GramPCA.topK(emb, "embedding", 64, 5)
+    }
+    assert(jobs <= 2, s"64 dims ran $jobs jobs: not the driver path")
     comps.sliding(2).foreach { case Seq((_, l1), (_, l2)) =>
       assert(l2 <= l1 * 1.05, s"lambda increased past tie-band: $l1 -> $l2")
     }

@@ -537,8 +537,8 @@ class PlanEvidenceSpec extends SparkSuite {
   // A local checkpoint keeps its input's hash partitioning only with AQE
   // off. The sessions here run AQE, so the LogicalRDD leaf reports
   // UnknownPartitioning(0) and a consumer keyed on the same column
-  // shuffles again. kmeansLloydBuild keeps a persist of the live plan
-  // next to its checkpoint for exactly this reason.
+  // shuffles again. The k-means memo build keeps a persist of the live
+  // Lloyd.units plan next to its checkpoint for exactly this reason.
   test("a local checkpoint keeps its hash partitioning only with AQE off") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
