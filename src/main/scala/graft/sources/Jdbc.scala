@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S9 — partitioned JDBC ingest (`dd.read_sql_table`'s Spark shape).
   *
-  * Both legs are tested offline. The IO leg runs end-to-end against the
-  * in-repo [[StubJdbcDriver]] (pure JDK `java.sql` interfaces — no
-  * driver jar, no network; JdbcReadSpec), exercising Spark's real JDBC
-  * scan path: schema probe, partition predicate generation, pushed
-  * filters, column pruning, row materialization. The pure leg — the
+  * Both legs are tested offline. The IO leg runs end-to-end against an
+  * embedded in-memory Apache Derby table (JdbcReadSpec; Derby ships in
+  * Spark's jars and Spark resolves its driver and dialect from the
+  * URL), exercising Spark's real JDBC scan path: schema probe, partition
+  * predicate generation, pushed filters, column pruning, row
+  * materialization. The pure leg — the
   * part that decides whether a 100 TB table ingests in parallel or
   * through one connection — is the range→predicate split planner.
   * `columnPartition` reproduces the documented semantics of Spark's own
@@ -87,35 +88,29 @@ object Jdbc {
     }
   }
 
-  /** The IO call-site — tested end-to-end against the in-repo
-    * [[StubJdbcDriver]] (JdbcReadSpec; r15 verdict #1 closed the
-    * coverage matrix's one partial cell with it). Production use is the
-    * same call with a real driver on the classpath:
+  /** The IO call-site — tested end-to-end against embedded Derby
+    * (JdbcReadSpec). Production use is the same call with the source's
+    * driver jar on the classpath; Spark picks the driver from the URL:
     *
     * {{{
     * Jdbc.readPartitioned(spark, "jdbc:postgresql://…", "events",
-    *   "event_id", lower, upper, n) // driver inferred from the URL
+    *   "event_id", lower, upper, n)
     * }}}
     *
-    * `driver` pins the `java.sql.Driver` class when the URL alone can't
-    * resolve one (Spark instantiates it by name on each executor —
-    * exactly how the spec injects the stub). `fetchsize` is the cursor
-    * batch — the other perf dial.
+    * Each partition's cursor fetches 10,000 rows per round-trip.
     */
   def readPartitioned(spark: SparkSession, url: String, table: String,
       column: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int, fetchSize: Int = 10000,
-      driver: Option[String] = None): DataFrame = {
-    val reader = spark.read.format("jdbc")
+      numPartitions: Int): DataFrame =
+    spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
       .option("partitionColumn", column)
       .option("lowerBound", lowerBound)
       .option("upperBound", upperBound)
       .option("numPartitions", numPartitions)
-      .option("fetchsize", fetchSize)
-    driver.fold(reader)(d => reader.option("driver", d)).load()
-  }
+      .option("fetchsize", 10000)
+      .load()
 
   /** Predicate-per-partition ingest driven by THIS library's split
     * planner ([[columnPartition]]) instead of Spark's: the skew route —
@@ -126,11 +121,9 @@ object Jdbc {
     * a WHERE clause unconditionally. */
   def readPlanned(spark: SparkSession, url: String, table: String,
       column: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int, driver: Option[String] = None): DataFrame = {
+      numPartitions: Int): DataFrame = {
     val predicates = columnPartition(column, lowerBound, upperBound,
       numPartitions).map(_.getOrElse("1=1")).toArray
-    val props = new java.util.Properties()
-    driver.foreach(props.setProperty("driver", _))
-    spark.read.jdbc(url, table, predicates, props)
+    spark.read.jdbc(url, table, predicates, new java.util.Properties())
   }
 }

@@ -148,17 +148,31 @@ class ContractSpec extends SparkSuite {
   }
 
   // The integer Lloyd loop was written out twice in Spark (q214's memo
-  // and q277) and four times as DuckDB CTEs (q214, q286, q317, q277).
+  // and q277) and four times as DuckDB CTEs (q214, q286, q317, q277),
+  // and q317's twin kept its own copy of the d²·k + cid key.
   // operators.Lloyd holds the one body and its one twin generator.
   test("the Lloyd arithmetic is written once per engine") {
-    val twin = "MIN(d2 *"
-    assert(filesWith(twin) == Set("Lloyd.scala"),
-      s"$twin found in ${filesWith(twin)}")
+    val key = "(ve.xu - c.cu)) * "
+    assert(filesWith(key) == Set("Lloyd.scala"), s"$key found in ${filesWith(key)}")
+    val argmin = "MIN(d2 *"
+    assert(filesWith(argmin).isEmpty, s"$argmin found in ${filesWith(argmin)}")
     val queries = java.nio.file.Paths.get("src/main/scala/graft/queries")
     val found = for {
       (f, l) <- mainCode if f.startsWith(queries)
       n <- Seq("def assign(", "def update(") if l.contains(n)
     } yield s"${f.getFileName}: ${l.trim}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  // A hand-written JDBC driver (a SQL parser behind reflect.Proxy
+  // connections) once lived in src/main only so a spec could read
+  // through it; JdbcReadSpec reads an embedded Derby table instead.
+  test("src/main holds no test double: no java.sql.Driver, no reflect.Proxy") {
+    val double = ("""(extends|with)\s+(java\.sql\.)?Driver\b""" +
+      """|java\.lang\.reflect\.(\{[^}]*)?\bProxy\b|\bProxy\.newProxyInstance""").r
+    val found = mainCode.collect {
+      case (f, l) if double.findFirstIn(l).nonEmpty => s"${f.getFileName}: ${l.trim}"
+    }
     assert(found.isEmpty, found.mkString("\n"))
   }
 

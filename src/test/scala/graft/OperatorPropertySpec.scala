@@ -162,7 +162,7 @@ class OperatorPropertySpec extends SparkSuite {
     }
     val path = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
     val ccExtra = extraAfter {
-      val r = graft.operators.ConnectedComponents.run(path, strict = true)
+      val r = graft.operators.ConnectedComponents.run(path)
       assert(r.count() == 200)
       assert(r.agg(org.apache.spark.sql.functions.countDistinct(
         org.apache.spark.sql.functions.col("cluster"))).head().getLong(0) == 1)
@@ -191,6 +191,17 @@ class OperatorPropertySpec extends SparkSuite {
     }
     assert(mpExtra <= 2,
       s"MinPlus left $mpExtra persisted RDDs (final generation + <=1 in-flight allowed)")
+  }
+
+  // One round cannot reach the star fixpoint of a 200-node path, and a
+  // missed fixpoint throws rather than returning under-merged labels.
+  test("CC throws when maxIter ends before the fixpoint") {
+    import spark.implicits._
+    val path = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      graft.operators.ConnectedComponents.run(path, maxIter = 1)
+    }
+    assert(e.getMessage.contains("no fixpoint after 1 rounds"))
   }
 
   test("dot product HOF == local fold") {
